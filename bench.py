@@ -419,19 +419,8 @@ def bench_streaming(spark, sf_dir: str) -> dict:
                     os.path.join(wal_dir, name),
                     os.path.join(multi_base, f"slot_{j % n_slots}", name),
                 )
-            from pg_bifrost_spark.cdc.pipeline import run_pipeline_assembled
-            from pg_bifrost_spark.sources import pgcdc_multi
-
-            pgcdc_multi.register(spark)
-
-            def multi_sink(batch_df, epoch_id):
-                batch_df.persist()
-                try:
-                    run_pipeline_assembled(batch_df, PipelineConfig()).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                finally:
-                    batch_df.unpersist()
+            from pg_bifrost_spark.sources.pgcdc_multi import PgCdcMultiDataSource
+            from pg_bifrost_spark.streaming.core import start_cdc_query
 
             rounds_box: list[int] = []
 
@@ -461,16 +450,11 @@ def bench_streaming(spark, sf_dir: str) -> dict:
                 try:
                     _clean_state(spark)
                     t0 = time.perf_counter()
-                    q = (
-                        spark.readStream.format("pgcdc-multi")
-                        .option("wal_dir", multi_base)
-                        .load()
-                        .writeStream.foreachBatch(multi_sink)
-                        .option("checkpointLocation", ck)
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    q.awaitTermination()
+                    start_cdc_query(
+                        spark, sink, ck, cfg=PipelineConfig(),
+                        source_options={"wal_dir": multi_base},
+                        source=PgCdcMultiDataSource,
+                    ).awaitTermination()
                     return round(time.perf_counter() - t0, 3)
                 finally:
                     shutil.rmtree(ck, ignore_errors=True)
@@ -505,7 +489,6 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         # dominated by the backoff schedule, exactly as the reference's
         # itest budget is.
         from pg_bifrost_spark.sinks.writers import kinesis_writer
-        from pg_bifrost_spark.streaming.core import start_cdc_query
 
         deg_wal = tempfile.mkdtemp(prefix="bench_wal_deg_")
         deg_ckpt = tempfile.mkdtemp(prefix="bench_ckpt_deg_")
@@ -593,30 +576,20 @@ def bench_streaming(spark, sf_dir: str) -> dict:
                             txn_i += 1
                 for w in writers_:
                     w.close()
-                degm_sink_inner = kinesis_writer(
+                degm_writer = kinesis_writer(
                     "bench-degraded-multi", transport=_FlakyTransport(50)
                 )
 
-                def degm_sink(batch_df, epoch_id):
-                    batch_df.persist()
-                    try:
-                        out = run_pipeline_assembled(batch_df, PipelineConfig())
-                        degm_sink_inner(out.repartition(20), epoch_id)
-                    finally:
-                        batch_df.unpersist()
+                def degm_sink(out, epoch_id):
+                    degm_writer(out.repartition(20), epoch_id)
 
                 _clean_state(spark)
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.format("pgcdc-multi")
-                    .option("wal_dir", degm_base)
-                    .load()
-                    .writeStream.foreachBatch(degm_sink)
-                    .option("checkpointLocation", degm_ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+                start_cdc_query(
+                    spark, degm_sink, degm_ckpt, cfg=PipelineConfig(),
+                    source_options={"wal_dir": degm_base},
+                    source=PgCdcMultiDataSource,
+                ).awaitTermination()
                 mddt = round(time.perf_counter() - t0, 3)
                 if mddt > DEGRADED_BUDGET_S:
                     raise RuntimeError(
@@ -667,16 +640,15 @@ def bench_interleaved(out_path: str = "BENCH_STREAM.json", reps: int = 3) -> Non
     from pyspark.sql import functions as F
 
     from pg_bifrost_spark.cdc.fixtures import wal_lines_from_table
-    from pg_bifrost_spark.cdc.pipeline import PipelineConfig, run_pipeline_assembled
+    from pg_bifrost_spark.cdc.pipeline import PipelineConfig
     from pg_bifrost_spark.plans import table
     from pg_bifrost_spark.plans.cdc_bridge import LINEITEM_PG_TYPES
-    from pg_bifrost_spark.sources import pgcdc_multi
-    from pg_bifrost_spark.streaming.core import drain_cdc_query
+    from pg_bifrost_spark.sources.pgcdc_multi import PgCdcMultiDataSource
+    from pg_bifrost_spark.streaming.core import drain_cdc_query, start_cdc_query
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     plans.load_all()
     spark = get_spark(app_name="pg_bifrost_spark_bench_stream")
-    pgcdc_multi.register(spark)
     n_slots = 4
     wal_dir = tempfile.mkdtemp(prefix="bench_wal_il_")
     multi_base = tempfile.mkdtemp(prefix="bench_wal_il_multi_")
@@ -717,15 +689,6 @@ def bench_interleaved(out_path: str = "BENCH_STREAM.json", reps: int = 3) -> Non
         def sink(batch_df, epoch_id):
             batch_df.write.format("noop").mode("overwrite").save()
 
-        def multi_sink(batch_df, epoch_id):
-            batch_df.persist()
-            try:
-                run_pipeline_assembled(batch_df, PipelineConfig()).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            finally:
-                batch_df.unpersist()
-
         def run_single() -> float:
             ckpt = tempfile.mkdtemp(prefix="bench_ckpt_il_s_")
             try:
@@ -747,16 +710,11 @@ def bench_interleaved(out_path: str = "BENCH_STREAM.json", reps: int = 3) -> Non
             try:
                 _clean_state(spark)
                 t0 = time.perf_counter()
-                q = (
-                    spark.readStream.format("pgcdc-multi")
-                    .option("wal_dir", multi_base)
-                    .load()
-                    .writeStream.foreachBatch(multi_sink)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+                start_cdc_query(
+                    spark, sink, ckpt, cfg=PipelineConfig(),
+                    source_options={"wal_dir": multi_base},
+                    source=PgCdcMultiDataSource,
+                ).awaitTermination()
                 return round(time.perf_counter() - t0, 3)
             finally:
                 shutil.rmtree(ckpt, ignore_errors=True)

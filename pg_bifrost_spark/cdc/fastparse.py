@@ -24,31 +24,14 @@ entirely with Spark SQL expressions, inside whole-stage codegen:
                   ``new-tuple:`` position and each map is ONE
                   ``map_from_entries`` over the parsed slice
 
-The split+build formulation replaced the r1-r3 ``aggregate()`` fold
-(kept below as ``_fold`` behind ``USE_FOLD`` for the equivalence
-suite): the fold built each map by chaining one ``map_concat`` per
-token — O(n²) map copying per row on top of interpreted HOF dispatch —
-and was the single largest CPU sink in the engine (VERDICT r3).
-``map_from_entries`` builds each map in one pass, and the lines with
-any OTHER marker arrangement (never produced by test_decoding) now
-fall to the Python scanner by failing eligibility.
-
-Measured (sf0.1 cdc_lineitem_roundtrip, ~1.8 M WAL lines, local[32],
-interleaved A/B, median of 3 per arm, two rounds): fold 9.80 s /
-10.42 s vs slice 7.98 s / 9.02 s — a consistent ~1.2× on the FULL
-roundtrip (parse + marshal + envelope consumption; the parse stage
-itself gains more). The gap widens with column count (the fold's
-map_concat chain is quadratic in row width, the slice path linear),
-so the slice path is the default at any schema wider than the
-fixtures'.
+Split+build replaced a per-token ``map_concat`` fold (O(n²) per row): ~1.2× on the sf0.1 cdc_lineitem roundtrip.
 
 Lines that fail the eligibility regex (quoted identifiers, TRUNCATE,
 malformed input) fall through to the Python scanner, which remains the
 arbiter of the full grammar. Equivalence of the two paths on eligible
 lines is pinned by ``tests/test_fastparse.py`` over an adversarial
 corpus (quoted values with spaces, ``''`` escapes, ``]:`` inside
-values, marker text inside values, NULL and TOAST sentinels), run
-against BOTH the slice path and the fold fallback.
+values, marker text inside values, NULL and TOAST sentinels).
 
 All repeated quantifiers in the regexes are possessive (Java regex) —
 every alternation is first-character-disjoint, so possessive matching
@@ -91,17 +74,6 @@ TOKEN_RE = rf"old-key:|new-tuple:|{_COL}"
 _COLS = rf"{_COL}(?: {_COL})*+"
 _BODY = rf"(?:\(no-tuple-data\)|(?:old-key: {_COLS} new-tuple: )?+{_COLS})"
 ELIGIBLE_RE = rf"^table ({_NAME}(?:\.{_NAME})*+): (INSERT|UPDATE|DELETE): {_BODY}$"
-
-# Fold fallback switch (see module docstring): False = slice+
-# map_from_entries (default), True = the r1-r3 aggregate() fold. The
-# equivalence suite runs both.
-USE_FOLD = False
-
-# Header-field extraction switch (r12): False = plain string ops over
-# the eligibility-pinned line shape (default — 3 fewer per-line regex
-# executions), True = the r1-r11 regexp_extract path (kept for the
-# interleaved A/B and the equivalence suite).
-USE_REGEX_HEADER = False
 
 _COLMAP_T = "map<string,struct<v:string,t:string,q:boolean>>"
 
@@ -161,64 +133,6 @@ def _split_maps(tokens: Column) -> Column:
     )
 
 
-def _parse_token(tk: Column) -> Column:
-    """One token → struct(marker, name, entry) — marker 1/2 for the
-    section switches, 0 for a real column. (Fold fallback only.)"""
-    prefix = F.regexp_extract(tk, rf"^([^\[]++\[{_TYPE}\]:)", 1)
-    raw = tk.substr(F.length(prefix) + 1, F.length(tk))
-    quoted = raw.startswith("'")
-    value = F.when(
-        quoted,
-        F.regexp_replace(raw.substr(F.lit(2), F.length(raw) - 2), "''", "'"),
-    ).otherwise(raw)
-    marker = (
-        F.when(tk == "old-key:", 1).when(tk == "new-tuple:", 2).otherwise(0)
-    )
-    return F.struct(
-        marker.alias("marker"),
-        F.regexp_extract(tk, r"^([^\[]++)\[", 1).alias("name"),
-        F.struct(
-            value.alias("v"),
-            F.regexp_extract(tk, rf"^[^\[]++\[({_TYPE})\]:", 1).alias("t"),
-            quoted.alias("q"),
-        ).alias("entry"),
-    )
-
-
-def _fold(parsed_tokens: Column) -> Column:
-    """Fold parsed tokens into struct(cols, old) maps, switching the
-    insertion target on the section markers. (Fold fallback, kept for
-    the equivalence suite — the slice path replaced it; this chains
-    one map_concat per token, O(n²) map copying per row.)"""
-    empty = F.expr(f"cast(map() as {_COLMAP_T})")
-    init = F.struct(
-        empty.alias("cols"), empty.alias("old"), F.lit(True).alias("to_new")
-    )
-
-    def merge(acc: Column, p: Column) -> Column:
-        entry = F.create_map(p["name"], p["entry"])
-        is_col = p["marker"] == 0
-        return F.struct(
-            F.when(is_col & acc["to_new"], F.map_concat(acc["cols"], entry))
-            .otherwise(acc["cols"])
-            .alias("cols"),
-            F.when(is_col & ~acc["to_new"], F.map_concat(acc["old"], entry))
-            .otherwise(acc["old"])
-            .alias("old"),
-            F.when(p["marker"] == 1, F.lit(False))
-            .when(p["marker"] == 2, F.lit(True))
-            .otherwise(acc["to_new"])
-            .alias("to_new"),
-        )
-
-    return F.aggregate(
-        parsed_tokens,
-        init,
-        merge,
-        lambda acc: F.struct(acc["cols"].alias("cols"), acc["old"].alias("old")),
-    )
-
-
 def _is_control(line: Column) -> Column:
     """Strict two-token BEGIN/COMMIT check (non-strict control-ish
     lines fall through to the Python parser's error accounting)."""
@@ -234,94 +148,67 @@ def jvm_parseable(line: Column) -> Column:
     return _is_control(line) | fast_eligible(line)
 
 
-def jvm_parse(
-    df: DataFrame, passthrough: list[str] = (), use_fold: bool | None = None
-) -> DataFrame:
+def jvm_parse(df: DataFrame, passthrough: list[str] = ()) -> DataFrame:
     """Parse a DataFrame of JVM-PARSEABLE raw lines (RAW_LINE_SCHEMA
     [+ passthrough txn columns]) into the Python parser's output schema
     (PARSED_SCHEMA_DDL order, incl. txn_xid — callers on the assembled
     path drop it). Entirely JVM expressions: one regex tokenize + one
-    map build per DML line, two string ops per control line.
-    ``use_fold`` overrides the module default (equivalence suite)."""
-    if use_fold is None:
-        use_fold = USE_FOLD
+    map build per DML line, two string ops per control line."""
     line = F.col("line")
     is_ctrl = _is_control(line)
-    if USE_REGEX_HEADER:
-        body = F.regexp_extract(line, r"^table [^:]++: [A-Z]++: (.*+)$", 1)
-    else:
-        # Header split by PLAIN string ops, not regex (r12, guide §1.2
-        # "per-task work"): every input line already full-matched
-        # ELIGIBLE_RE (the caller's contract), which pins the exact
-        # shape ``table <rel>: <OP>: <body>`` with a colon-and-space-
-        # free relation charset — so the first ``: `` ends the
-        # relation, the second ends the operation, and the body starts
-        # at a computable offset. This removes three per-line regex
-        # executions (body / operation / relation extracts) that
-        # together re-scanned every line three more times after the
-        # eligibility match.
-        rel_expr = F.expr("substring(substring_index(line, ': ', 1), 7)")
-        op_expr = F.substring_index(F.substring_index(line, ": ", 2), ": ", -1)
-        # "table " (6) + rel + ": " (2) + op + ": " (2) → body starts
-        # at 6 + len(rel) + 2 + len(op) + 2 + 1 (substr is 1-based)
-        body = line.substr(
-            F.length(rel_expr) + F.length(op_expr) + F.lit(11), F.length(line)
-        )
+    # Header split by PLAIN string ops, not regex (r12, guide §1.2
+    # "per-task work"): every input line already full-matched
+    # ELIGIBLE_RE (the caller's contract), which pins the exact shape
+    # ``table <rel>: <OP>: <body>`` with a colon-and-space-free
+    # relation charset — so the first ``: `` ends the relation, the
+    # second ends the operation, and the body starts at a computable
+    # offset. This removed three per-line regex executions (body /
+    # operation / relation extracts) that together re-scanned every
+    # line three more times after the eligibility match.
+    rel_expr = F.expr("substring(substring_index(line, ': ', 1), 7)")
+    op_expr = F.substring_index(F.substring_index(line, ": ", 2), ": ", -1)
+    # "table " (6) + rel + ": " (2) + op + ": " (2) → body starts at
+    # 6 + len(rel) + 2 + len(op) + 2 + 1 (substr is 1-based)
+    body = line.substr(
+        F.length(rel_expr) + F.length(op_expr) + F.lit(11), F.length(line)
+    )
     tokens = F.regexp_extract_all(body, F.lit(TOKEN_RE), F.lit(0))
     head = ["wal_start", "server_wal_end", "server_time_ms", "stream_id"]
     # Staging discipline: the HOF-built expressions below are
     # codegen-fallback (no common-subexpression elimination), so any
     # attribute referenced more than once downstream must be
     # materialized in its OWN projection — CollapseProject's
-    # multi-reference guard then keeps it evaluated once per row
-    # (an inlined fold ran 2.2× slower; see also functions/barrier.py
-    # for the cross-operator case).
-    if use_fold:
-        folded = _fold(F.transform(tokens, _parse_token))
-        staged = df.select(
-            *head,
-            line.alias("line"),
-            # control rows carry NULL here → coalesced to EMPTY maps
-            # below, byte-equal to the Python parser's BEGIN/COMMIT
-            # output (empty dicts, not NULL)
-            F.when(is_ctrl, F.lit(None)).otherwise(folded).alias("_maps"),
-            *passthrough,
-        )
-    else:
-        # slice path: the token array is referenced five times by the
-        # split (head check, marker position, two slices, size) — stage
-        # it first so the regex scan runs once per line.
-        toks_staged = df.select(
-            *head,
-            line.alias("line"),
-            F.when(is_ctrl, F.lit(None)).otherwise(tokens).alias("_toks"),
-            *passthrough,
-        )
-        staged = toks_staged.select(
-            *head,
-            "line",
-            F.when(F.col("_toks").isNull(), F.lit(None))
-            .otherwise(_split_maps(F.col("_toks")))
-            .alias("_maps"),
-            *passthrough,
-        )
+    # multi-reference guard then keeps it evaluated once per row (see
+    # also functions/barrier.py for the cross-operator case). The token
+    # array is referenced five times by the split (head check, marker
+    # position, two slices, size), so it is staged first and the regex
+    # scan runs once per line.
+    toks_staged = df.select(
+        *head,
+        line.alias("line"),
+        # control rows carry NULL here → coalesced to EMPTY maps below,
+        # byte-equal to the Python parser's BEGIN/COMMIT output (empty
+        # dicts, not NULL)
+        F.when(is_ctrl, F.lit(None)).otherwise(tokens).alias("_toks"),
+        *passthrough,
+    )
+    staged = toks_staged.select(
+        *head,
+        "line",
+        F.when(F.col("_toks").isNull(), F.lit(None))
+        .otherwise(_split_maps(F.col("_toks")))
+        .alias("_maps"),
+        *passthrough,
+    )
     empty_map = F.expr(f"cast(map() as {_COLMAP_T})")
     is_ctrl2 = _is_control(F.col("line"))
-    if USE_REGEX_HEADER:
-        op_out = F.regexp_extract(
-            "line", r"^table [^:]++: (INSERT|UPDATE|DELETE):", 1
-        )
-        rel_out = F.regexp_extract("line", r"^table ([^:]++): ", 1)
-    else:
-        op_out = F.substring_index(F.substring_index("line", ": ", 2), ": ", -1)
-        rel_out = F.expr("substring(substring_index(line, ': ', 1), 7)")
     return staged.select(
         *head,
         F.when(is_ctrl2, F.element_at(F.split("line", " "), 1))
-        .otherwise(op_out)
+        .otherwise(op_expr)
         .alias("operation"),
         F.when(is_ctrl2, F.lit(None).cast("string"))
-        .otherwise(rel_out)
+        .otherwise(rel_expr)
         .alias("relation"),
         F.when(is_ctrl2, F.element_at(F.split("line", " "), 2))
         .otherwise(F.lit(None).cast("string"))

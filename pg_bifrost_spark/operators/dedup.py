@@ -1654,12 +1654,7 @@ def _span_hash_arrays(docs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _mark_span_counts(
-    sp: DataFrame,
-    salts: int | None,
-    order_col: str,
-    count_join: bool = False,
-) -> DataFrame:
+def _mark_span_counts(sp: DataFrame, salts: int | None, order_col: str) -> DataFrame:
     """Append ``c`` = corpus-wide occurrence count of each row's span.
 
     Default (``salts=None``, the measured winner): ONE exchange on the
@@ -1670,10 +1665,9 @@ def _mark_span_counts(
     but it IS one task's group, so a boilerplate span covering ~10% of
     span rows makes that task a straggler at extreme scale.
 
-    r13 re-adjudication: the cache + groupBy(span_h) + count-back-join
-    shape (``count_join=True``, kept for the measurement pin) was
-    built on the theory that the sort and the scattered-doc second
-    exchange dominate; interleaved A/B at the 10× scale leg AFTER the
+    r13 re-adjudication: a cache + groupBy(span_h) + count-back-join
+    shape (removed, see git history) was built on the theory that the
+    sort and the scattered-doc second exchange dominate; interleaved A/B at the 10× scale leg AFTER the
     input-parallelism fix in ``_span_hash_arrays`` says otherwise —
     window 3.2-3.8 s vs count-join 4.5-5.6 s (stats), 4.6-5.0 vs
     5.2-5.6 (removal): the cache materialization + extra join stages
@@ -1693,16 +1687,6 @@ def _mark_span_counts(
     salted 4.07 s; 9.7 M rows → 4.90 s vs 8.02 s."""
     from pyspark.sql import Window
 
-    if salts is None and count_join:
-        sp = tracked_cache(sp)
-        cnt = (
-            sp.groupBy("span_h")
-            .agg(F.count("*").alias("c2"))
-            .filter(F.col("c2") >= 2)
-        )
-        return sp.join(cnt, "span_h", "left").withColumn(
-            "c", F.coalesce(F.col("c2"), F.lit(1))
-        ).drop("c2")
     if salts is None:
         sp = spread(sp, "span_h")
         return sp.withColumn(
@@ -1730,7 +1714,6 @@ def repeated_span_stats(
     docs: DataFrame,
     k: int = SPAN_K,
     salts: int | None = None,
-    count_join: bool = False,
 ) -> DataFrame:
     """(doc_id, n_spans, n_repeated, repeat_ratio) for docs containing
     at least one K-token span that occurs ≥2 times in the corpus.
@@ -1742,7 +1725,7 @@ def repeated_span_stats(
     (hash-stable across engines)."""
     spans = _span_hash_arrays(docs, k)
     sp = spans.select("doc_id", F.explode("span_hs").alias("span_h"))
-    marked = _mark_span_counts(sp, salts, "doc_id", count_join=count_join)
+    marked = _mark_span_counts(sp, salts, "doc_id")
     rep = F.sum(F.when(F.col("c") >= 2, 1).otherwise(0)).cast("bigint")
     return (
         marked.groupBy("doc_id")
@@ -1819,7 +1802,6 @@ def remove_repeated_spans(
     docs: DataFrame,
     k: int = SPAN_K,
     salts: int | None = None,
-    count_join: bool = False,
 ) -> DataFrame:
     """(doc_id, n_tokens, n_removed, cleaned_text) for docs that had at
     least one repeated span removed.
@@ -1842,7 +1824,7 @@ def remove_repeated_spans(
         "doc_id", F.posexplode("span_hs").alias("pos0", "span_h")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "span_h")
     rep_pos = (
-        _mark_span_counts(sp, salts, "pos", count_join=count_join)
+        _mark_span_counts(sp, salts, "pos")
         .filter(F.col("c") >= 2)
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("rep_starts"))

@@ -20,6 +20,10 @@ offset/commit log supplies the progress-ledger semantics (X12):
     committed offset — at-least-once (W5), duplicates carry the same
     ``time_based_key`` for downstream idempotence (W4).
 
+Transaction assembly (BEGIN adopts the xid, the ``time_based_key``,
+the synthetic COMMIT at an error marker) and the equal-LSN run index
+live in ``sources/assembly.py``; both readers here call it.
+
 Transports:
   * ``ReplayTransport`` — WAL-text files on disk (deterministic tests,
     and the bridge to the itest corpus);
@@ -33,9 +37,12 @@ Transports:
 
 from __future__ import annotations
 
+import bisect
+import dataclasses
 import json
 import os
 from dataclasses import dataclass
+from itertools import islice
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
@@ -44,48 +51,10 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
-# raw message + assembled txn identity (parser runs downstream)
-PGCDC_SCHEMA = StructType(
-    [
-        StructField("wal_start", LongType()),
-        StructField("server_wal_end", LongType()),
-        StructField("server_time_ms", LongType()),
-        StructField("stream_id", IntegerType()),
-        StructField("line", StringType()),
-        StructField("txn_id", StringType()),
-        StructField("time_based_key", StringType()),
-    ]
-)
-
-
-# process-wide count of fetches that ended TRUNCATED — budget
-# exhaustion, or a partial batch committed because reconnect attempts
-# ran out. NOTE (ADVICE r9): when the reader runs inside PySpark's
-# Python data-source worker (python_streaming_source_runner), this
-# counter lives in THAT process, not the user's driver process — so it
-# is a same-process convenience only (tests, direct transport use).
-# The cross-process channel is the OFFSET: ``_Offset.trunc`` carries a
-# cumulative truncated-fetch count through the checkpoint/progress
-# log, and ``drain_cdc_query`` reads it from ``lastProgress`` (the
-# start→end delta of one batch says whether THAT batch truncated).
-_TRUNCATION_EVENTS = 0
-
-
-def truncation_events() -> int:
-    return _TRUNCATION_EVENTS
-
-
-def _note_truncation() -> None:
-    global _TRUNCATION_EVENTS
-    _TRUNCATION_EVENTS += 1
+from . import assembly
+from .assembly import PGCDC_SCHEMA
 
 
 class ReplayTransport:
@@ -165,6 +134,19 @@ class ReplayTransport:
     # transport when stamping the offset's truncation count
     truncations = 0
 
+    def index(self, lsn: int, seq: int | None) -> int:
+        """Corpus index of the first message NOT consumed at position
+        ``(lsn, seq)``: ``seq`` messages into the equal-LSN run at
+        ``lsn``, counted by ``assembly.run_head_k``; ``None`` is the
+        legacy whole-run form. Call after ``_load``."""
+        lsns = self._lsns
+        if seq is None:
+            return bisect.bisect_right(lsns, lsn)
+        i = bisect.bisect_left(lsns, lsn)
+        if i < len(lsns) and lsns[i] == lsn:
+            i -= assembly.run_head_k(self._msgs[i][2])
+        return min(i + seq, len(lsns))
+
     def fetch(
         self, after_lsn: int, limit: int, after_seq: int | None = None
     ) -> list[tuple[int, int, str | None, int]]:
@@ -179,25 +161,24 @@ class ReplayTransport:
         transaction. ``after_seq = S`` means "the first S messages at
         ``after_lsn`` are consumed"; ``None`` is the legacy offset form
         (pre-seq checkpoints): everything at ``after_lsn`` consumed.
+        ``k`` follows ``assembly.run_head_k``, the same rule the live
+        transport applies, so either transport resumes from the other's
+        offset.
 
         A file line ``{"wal_start": N, "error": "..."}`` models a
         protocol ErrorResponse at that position (line=None) — the
         replay analog of a decoding fault."""
-        import bisect
-
         msgs = self._load()
-        if after_seq is None:
-            i = bisect.bisect_right(self._lsns, after_lsn)
-        else:
-            i = min(bisect.bisect_left(self._lsns, after_lsn) + after_seq, len(msgs))
+        i = self.index(after_lsn, after_seq)
         out: list[tuple[int, int, str | None, int]] = []
-        run_lsn, run_start = None, 0
+        run_lsn, base = None, 0
         for idx in range(i, min(i + limit, len(msgs))):
             lsn, tms, line = msgs[idx]
             if lsn != run_lsn:
                 run_lsn = lsn
-                run_start = bisect.bisect_left(self._lsns, lsn)
-            out.append((lsn, tms, line, idx - run_start))
+                head = bisect.bisect_left(self._lsns, lsn)
+                base = head - assembly.run_head_k(msgs[head][2])
+            out.append((lsn, tms, line, idx - base))
         return out
 
     def current_end(self) -> int:
@@ -330,8 +311,10 @@ class LiveTransport:
         # process boundary, ADVICE r9)
         self.truncations = 0
         # per-connection equal-LSN run tracker: k = index of a frame
-        # within its wal_start run since (re)connect. START_REPLICATION
-        # resends from the requested LSN's run start, so a frame's k is
+        # within its wal_start run since (re)connect, by
+        # ``assembly.run_head_k``. START_REPLICATION resends the
+        # requested LSN's run from its first frame (except a COMMIT that
+        # ended at that LSN, which takes no index), so a frame's k is
         # stable across reconnects and can address batch boundaries.
         self._run_lsn: int | None = None
         self._run_k = 0
@@ -440,10 +423,6 @@ class LiveTransport:
             return
         raise last_exc  # type: ignore[misc]
 
-    def _mark_truncated(self) -> None:
-        self.truncations += 1
-        _note_truncation()
-
     # ------------------------------------------------------------- fetch
     def fetch(
         self, after_lsn: int, limit: int, after_seq: int | None = None
@@ -460,8 +439,8 @@ class LiveTransport:
         that). Only reconnect exhaustion with an EMPTY batch raises;
         with rows in hand the partial batch commits its progress and
         the next fetch surfaces the error if the server is still
-        down (the drain loop re-runs on truncation — see
-        ``truncation_events``).
+        down (the drain loop re-runs on truncation, which the reader
+        carries in the offset's ``trunc`` field).
 
         Admission filter: position ``(wal_start, k) > (after_lsn,
         after_seq-1)`` where ``k`` is the frame's index within its
@@ -483,6 +462,7 @@ class LiveTransport:
 
         from .pgwire import ServerError, WireError
 
+        after = _Offset(lsn=after_lsn, seq=after_seq)
         out: list[tuple[int, int, str | None, int]] = []
         # high-water mark of emitted POSITIONS: (a) a synthetic COMMIT
         # (error recovery) carries the last COMMIT's LSN, possibly
@@ -527,13 +507,10 @@ class LiveTransport:
                     if m.wal_start == self._run_lsn:
                         self._run_k += 1
                     else:
-                        self._run_lsn, self._run_k = m.wal_start, 0
+                        self._run_lsn = m.wal_start
+                        self._run_k = assembly.run_head_k(m.line)
                     k = self._run_k
-                    if m.wal_start > after_lsn or (
-                        m.wal_start == after_lsn
-                        and after_seq is not None
-                        and k >= after_seq
-                    ):
+                    if not after.consumed(m.wal_start, k):
                         if (m.wal_start, k) > (hwm, hwm_k):
                             hwm, hwm_k = m.wal_start, k
                         out.append((m.wal_start, m.server_time_ms, m.line, k))
@@ -578,7 +555,7 @@ class LiveTransport:
         # exit after a mid-batch error (ADVICE r9 + code-review r10 —
         # the last two previously returned unflagged)
         if truncated or len(out) < limit:
-            self._mark_truncated()
+            self.truncations += 1
         self._drain_decoder_messages()
         return out[:limit]
 
@@ -607,8 +584,8 @@ class LiveTransport:
         migration fences). In-process consumers (replay drains, the
         CLI --once path, tests) read these directly; across the
         PySpark data-source worker boundary only the stats counters
-        travel (the same process-boundary limitation as
-        ``truncation_events``, documented there)."""
+        travel: the reader runs in that worker's process, and only the
+        offset dict comes back to the driver."""
         out = self.messages
         self.messages = []
         return out
@@ -688,11 +665,13 @@ class _Offset:
     lsn: int = 0
     xid: str | None = None  # last-seen BEGIN xid (W3 carry-over)
     tbk: str | None = None  # its time_based_key
-    # sub-LSN position: COUNT of messages consumed at exactly ``lsn``
-    # (ADVICE r9 — BEGIN and the txn's first change share a wal_start,
-    # so an LSN alone cannot address a batch boundary that lands
-    # inside an equal-LSN run). ``None`` = legacy/pre-seq checkpoint
-    # semantics: everything at ``lsn`` consumed.
+    # sub-LSN position: COUNT of messages consumed at exactly ``lsn``,
+    # i.e. the last consumed message's run index k + 1
+    # (``assembly.run_head_k``; ADVICE r9 — BEGIN and the txn's first
+    # change share a wal_start, so an LSN alone cannot address a batch
+    # boundary that lands inside an equal-LSN run). ``None`` =
+    # legacy/pre-seq checkpoint semantics: everything at ``lsn``
+    # consumed.
     seq: int | None = None
     # cumulative count of TRUNCATED fetches along this offset lineage
     # (budget exhaustion / partial batch on reconnect exhaustion).
@@ -720,6 +699,36 @@ class _Offset:
             seq=d.get("seq"),
             trunc=d.get("trunc") or 0,
         )
+
+    def consumed(self, lsn: int, k: int) -> bool:
+        """Whether the message at run position ``(lsn, k)`` lies at or
+        before this offset: the one position order for transport
+        admission, end-offset advance and checkpointed-range replay."""
+        if lsn != self.lsn:
+            return lsn < self.lsn
+        return self.seq is None or k < self.seq
+
+    def next_batch(self, transport, cap: int, rows: list | None = None):
+        """Fetch the batch after this offset and fold it through
+        ``assembly.fold`` (appending to ``rows`` when given). Returns
+        ``(msgs, end)``. The end offset carries the txn state after the
+        batch and the furthest position consumed: a live reconnect may
+        re-deliver earlier frames, and they never move it back. An
+        error marker jumps it past everything the server holds now
+        (client.go:386-424), a documented at-least-once gap. ``trunc``
+        adds the transport's truncated fetches."""
+        truncs = transport.truncations
+        msgs = transport.fetch(self.lsn, cap, self.seq)
+        end = dataclasses.replace(self)
+        end.xid, end.tbk, n = assembly.fold(msgs, self.xid, self.tbk, rows)
+        if n:
+            lsn, k = max((m[0], m[3]) for m in islice(msgs, n))
+            if not end.consumed(lsn, k):
+                end.lsn, end.seq = lsn, k + 1
+        if n < len(msgs):
+            end.lsn, end.seq = max(msgs[n][0], transport.current_end()), None
+        end.trunc += transport.truncations - truncs
+        return msgs, end
 
 
 class PgCdcSimpleReader(SimpleDataSourceStreamReader):
@@ -749,62 +758,25 @@ class PgCdcSimpleReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return _Offset().to_dict()
 
-    def _read_batch(self, off: _Offset):
-        """One admission-capped batch from position (off.lsn, off.seq).
-        Returns (rows, positions, end_offset); positions[i] = (lsn, k)
-        of rows[i] so replay filtering can address equal-LSN runs."""
-        truncs_before = getattr(self.transport, "truncations", 0)
-        msgs = self.transport.fetch(off.lsn, self.max_msgs, off.seq)
-        rows, poss = [], []
-        xid, tbk = off.xid, off.tbk
-        for lsn, time_ms, line, k in msgs:
-            if line is None:
-                # error-recovery skip-ahead (S7, client.go:386-424):
-                # close the open transaction with a synthetic COMMIT,
-                # then jump past everything currently available —
-                # at-least-once with an explicit, documented data gap.
-                if xid is not None:
-                    rows.append((lsn, lsn + 8, time_ms, 0, f"COMMIT {xid}", xid, tbk))
-                    poss.append((lsn, k))
-                off.lsn = max(lsn, self.transport.current_end())
-                off.seq = None  # the jump consumes everything at off.lsn
-                break
-            # transaction assembly (client.go:487-545): xid appears on
-            # BEGIN/COMMIT; intermediate rows take the last BEGIN's.
-            # time_based_key uses the BEGIN's LSN as the deterministic
-            # replay-distinguishing component.
-            first = line.split(" ", 2)
-            if first[0] == "BEGIN" and len(first) >= 2:
-                xid, tbk = first[1], f"{first[1]}-{lsn}"
-            rows.append((lsn, lsn + 8, time_ms, 0, line, xid, tbk))
-            poss.append((lsn, k))
-            # monotone end POSITION: a live reconnect mid-batch may
-            # re-deliver boundary frames (at-least-once), so only a
-            # strictly greater (lsn, k) advances the offset; seq is the
-            # consumed COUNT at off.lsn (= last k + 1)
-            if lsn > off.lsn or (lsn == off.lsn and off.seq is not None and k + 1 > off.seq):
-                off.lsn, off.seq = lsn, k + 1
-        off.xid, off.tbk = xid, tbk
-        off.trunc += getattr(self.transport, "truncations", 0) - truncs_before
-        return rows, poss, off
+    def _read_batch(self, start: dict):
+        """One admission-capped batch from ``start``: (rows, msgs, end),
+        where ``rows[i]`` is ``msgs[i]`` assembled (an error marker's
+        row is its synthetic COMMIT)."""
+        rows: list = []
+        off = _Offset.from_dict(start)
+        msgs, end = off.next_batch(self.transport, self.max_msgs, rows)
+        return assembly.tuples(rows), msgs, end
 
     def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
-        rows, _poss, off = self._read_batch(_Offset.from_dict(start))
-        return iter(rows), off.to_dict()
+        rows, _msgs, end = self._read_batch(start)
+        return iter(rows), end.to_dict()
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         """Deterministic replay of a checkpointed range (exactly the
         reference's resume-at-LSN, X13)."""
-        rows, poss, _ = self._read_batch(_Offset.from_dict(start))
+        rows, msgs, _ = self._read_batch(start)
         e = _Offset.from_dict(end)
-
-        def _within(pos):
-            lsn, k = pos
-            if lsn != e.lsn:
-                return lsn < e.lsn
-            return e.seq is None or k < e.seq
-
-        return iter([r for r, p in zip(rows, poss) if _within(p)])
+        return iter([r for r, m in zip(rows, msgs) if e.consumed(m[0], m[3])])
 
     def commit(self, end: dict) -> None:
         """Micro-batch durably committed → ack the contiguous prefix
@@ -911,82 +883,19 @@ class PgCdcParallelReader(DataSourceStreamReader):
 
     def _resume_state(self) -> _Offset:
         """Offset to advance FROM when this reader object has planned
-        no batch yet (fresh query or restart): the acked LSN is the
+        no batch yet (fresh query or restart): the acked position is the
         last durably committed batch end (commit() wrote it). The
-        in-flight txn state at that LSN is recovered by scanning the
-        corpus backwards for the nearest BEGIN/COMMIT — O(txn) work,
-        once per query start."""
+        in-flight txn state there comes from ``assembly.enclosing_txn``
+        — O(txn) work, once per query start."""
         lsn, seq = self.transport.acked_pos()
-        msgs, lsns = self.transport._load(), self.transport._lsns
-
-        i = self._pos_index(lsns, _Offset(lsn=lsn, seq=seq))
-        for j in range(i - 1, -1, -1):
-            line = msgs[j][2]
-            if line is None:
-                break
-            head = line.split(" ", 2)
-            if head[0] == "COMMIT":
-                break
-            if head[0] == "BEGIN" and len(head) >= 2:
-                return _Offset(
-                    lsn=lsn, xid=head[1], tbk=f"{head[1]}-{msgs[j][0]}", seq=seq
-                )
-        return _Offset(lsn=lsn, seq=seq)
-
-    @staticmethod
-    def _advance(msgs, start: _Offset, transport=None) -> _Offset:
-        """Fold txn state over a batch slice — the same per-message
-        rules as PgCdcSimpleReader.read (BEGIN adopts xid, error
-        marker skips to server WAL end). Accepts both fetch-shaped
-        4-tuples (with the equal-LSN run index ``k``, which sets the
-        end offset's sub-LSN ``seq``) and raw 3-tuple corpus slices
-        (used only for per-chunk txn state, where seq is unused)."""
-        xid, tbk = start.xid, start.tbk
-        lsn, seq, trunc = start.lsn, start.seq, start.trunc
-        for m in msgs:
-            m_lsn, _t, line = m[0], m[1], m[2]
-            if line is None:
-                end = transport.current_end() if transport is not None else m_lsn
-                # the jump consumes everything at the target lsn
-                return _Offset(
-                    lsn=max(m_lsn, end), xid=xid, tbk=tbk, seq=None, trunc=trunc
-                )
-            head = line.split(" ", 2)
-            if head[0] == "BEGIN" and len(head) >= 2:
-                xid, tbk = head[1], f"{head[1]}-{m_lsn}"
-            lsn = m_lsn
-            seq = (m[3] + 1) if len(m) > 3 else None
-        return _Offset(lsn=lsn, xid=xid, tbk=tbk, seq=seq, trunc=trunc)
+        msgs = self.transport._load()
+        _, xid, tbk = assembly.enclosing_txn(msgs, self.transport.index(lsn, seq))
+        return _Offset(lsn=lsn, xid=xid, tbk=tbk, seq=seq)
 
     def latestOffset(self) -> dict:
         start = self._last if self._last is not None else self._resume_state()
-        batch = self.transport.fetch(start.lsn, self.max_msgs, start.seq)
-        end = self._advance(batch, start, self.transport)
-        self._last = end
-        return end.to_dict()
-
-    @staticmethod
-    def _pos_index(lsns, off: _Offset) -> int:
-        """First corpus index NOT consumed by ``off`` — sub-LSN aware:
-        (lsn, seq) addresses ``seq`` messages into the equal-LSN run
-        (ADVICE r9); seq=None is the legacy whole-run form."""
-        import bisect
-
-        if off.seq is None:
-            return bisect.bisect_right(lsns, off.lsn)
-        return min(bisect.bisect_left(lsns, off.lsn) + off.seq, len(lsns))
-
-    @classmethod
-    def _batch_slice(cls, msgs, lsns, start: _Offset, end: _Offset):
-        """[i0, i1) of the sorted corpus for offset range (start, end],
-        truncated just past the first error marker (skip-ahead leaves
-        a documented gap)."""
-        i0 = cls._pos_index(lsns, start)
-        i1 = cls._pos_index(lsns, end)
-        for j in range(i0, i1):
-            if msgs[j][2] is None:
-                return i0, j + 1
-        return i0, i1
+        _msgs, self._last = start.next_batch(self.transport, self.max_msgs)
+        return self._last.to_dict()
 
     def _spans(self, a: int, b: int) -> list:
         """Compress sorted-corpus indices [a, b) into (file, line_lo,
@@ -1006,59 +915,31 @@ class PgCdcParallelReader(DataSourceStreamReader):
         return [tuple(s) for s in spans]
 
     def partitions(self, start: dict, end: dict):
+        """Chunks of the corpus slice for offset range (start, end],
+        each with the txn state at its first message. An error marker
+        ends the slice just past itself (skip-ahead leaves a documented
+        gap)."""
         s, e = _Offset.from_dict(start), _Offset.from_dict(end)
-        msgs, lsns = self.transport._load(), self.transport._lsns
-        i0, i1 = self._batch_slice(msgs, lsns, s, e)
+        msgs = self.transport._load()
+        a, i1 = self.transport.index(s.lsn, s.seq), self.transport.index(e.lsn, e.seq)
         self._last = e  # replay of a logged batch also anchors advance
         chunks: list[_WalChunk] = []
-        state = s
-        for a in range(i0, i1, self.msgs_per_partition):
+        xid, tbk = s.xid, s.tbk
+        while a < i1:
             b = min(a + self.msgs_per_partition, i1)
-            chunks.append(
-                _WalChunk(self.wal_dir, self._spans(a, b), state.xid, state.tbk)
-            )
-            state = self._advance(msgs[a:b], state)
+            next_xid, next_tbk, n = assembly.fold(msgs[a:b], xid, tbk)
+            if a + n < b:
+                b = i1 = a + n + 1
+            chunks.append(_WalChunk(self.wal_dir, self._spans(a, b), xid, tbk))
+            xid, tbk, a = next_xid, next_tbk, b
         return chunks or [_WalChunk(self.wal_dir, [], s.xid, s.tbk)]
 
     # -- executor-side data path ----------------------------------------
     def read(self, partition: _WalChunk):
-        import pyarrow as pa
-
+        rows: list = []
         msgs = _read_span_msgs(partition.wal_dir, partition.spans)
-        xid, tbk = partition.base_xid, partition.base_tbk
-        wal, tms, lines, xids, tbks = [], [], [], [], []
-        for lsn, time_ms, line in msgs:
-            if line is None:
-                # decode-error skip-ahead: close the open txn with a
-                # synthetic COMMIT (S7) — the offset planner already
-                # jumped past the gap
-                if xid is not None:
-                    wal.append(lsn)
-                    tms.append(time_ms)
-                    lines.append(f"COMMIT {xid}")
-                    xids.append(xid)
-                    tbks.append(tbk)
-                break
-            head = line.split(" ", 2)
-            if head[0] == "BEGIN" and len(head) >= 2:
-                xid, tbk = head[1], f"{head[1]}-{lsn}"
-            wal.append(lsn)
-            tms.append(time_ms)
-            lines.append(line)
-            xids.append(xid)
-            tbks.append(tbk)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(wal, pa.int64()),
-                pa.array([w + 8 for w in wal], pa.int64()),
-                pa.array(tms, pa.int64()),
-                pa.array([0] * len(wal), pa.int32()),
-                pa.array(lines, pa.string()),
-                pa.array(xids, pa.string()),
-                pa.array(tbks, pa.string()),
-            ],
-            names=[f.name for f in PGCDC_SCHEMA.fields],
-        )
+        assembly.fold(msgs, partition.base_xid, partition.base_tbk, rows)
+        yield assembly.arrow_batch(rows)
 
     def commit(self, end: dict) -> None:
         off = _Offset.from_dict(end)

@@ -10,10 +10,11 @@ with per-slot offsets committed atomically in one Spark offset — the
 multiplexing the reference would need N processes for.
 
 Offsets are ``{slot: lsn}``. Transaction-assembly state is NOT kept in
-the offset: ``read`` re-derives the enclosing transaction by scanning
-back to the last BEGIN at-or-before the range start — deterministic on
-replayable storage (a live deployment would instead checkpoint
-per-slot reader state; same interface).
+the offset: ``read`` re-derives the enclosing transaction with
+``assembly.enclosing_txn`` at the range start, then assembles the range
+with ``assembly.fold`` — the same rule as the single-slot readers, and
+deterministic on replayable storage (a live deployment would instead
+checkpoint per-slot reader state; same interface).
 
 Scale posture (VERDICT r5 "Wrong #2"): the driver plans offsets from
 PER-FILE LSN METADATA only — ``latestOffset`` never opens a data file
@@ -27,7 +28,9 @@ trigger. Data movement is executor-side: a partition carries the
 slot's file-metadata list and each task opens ONLY the files whose
 [min_lsn, max_lsn] overlap its range (plus, for the BEGIN back-scan,
 at most the boundary files — O(txn), same bound as the single-slot
-reader's ``_resume_state``).
+reader's ``_resume_state``). Messages sort stably by
+``(wal_start, server_time_ms)`` over files in name order, the single-slot
+replay transport's order.
 
 Layout: ``<wal_dir>/<slot>/*.jsonl`` (same line format as the
 single-slot replay transport).
@@ -35,13 +38,15 @@ single-slot replay transport).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from .pgcdc import PGCDC_SCHEMA
+from . import assembly
+from .assembly import PGCDC_SCHEMA
 
 
 def _parse_slot_file(path: str) -> list[tuple[int, int, str]]:
@@ -181,75 +186,39 @@ class PgCdcMultiStreamReader(DataSourceStreamReader):
         ] or [SlotRangePartition(self.wal_dir, self.slots[0], 0, 0, 0)]
 
     def read(self, partition: SlotRangePartition) -> Iterator[Tuple]:
-        import pyarrow as pa
-
         slot_dir = os.path.join(partition.wal_dir, partition.slot)
         start, end = partition.start_lsn, partition.end_lsn
         # 1. parse ONLY the files whose LSN range overlaps (start, end]
-        touched: set[str] = set()
-        msgs: list[tuple[int, int, str]] = []
-        for name, lo, hi in partition.files:
-            if lo is not None and hi > start and lo <= end:
-                touched.add(name)
-                msgs.extend(_parse_slot_file(os.path.join(slot_dir, name)))
-        msgs.sort()
-
-        def last_begin(seq):
-            """(lsn, xid) of the max-LSN BEGIN at-or-before start."""
-            best = None
-            for lsn, _, line in seq:
-                if lsn > start:
-                    break
-                head = line.split(" ", 2)
-                if head[0] == "BEGIN" and len(head) >= 2:
-                    best = (lsn, head[1])
-            return best
-
+        parsed = {
+            name: _parse_slot_file(os.path.join(slot_dir, name))
+            for name, lo, hi in partition.files
+            if lo is not None and hi > start and lo <= end
+        }
         # 2. enclosing-transaction back-scan: the overlapping files'
         #    prefix first, then earlier files in descending max_lsn —
-        #    stopping as soon as no remaining file can hold a later
-        #    BEGIN (on an LSN-ordered layout this is ≤1 extra file).
-        best = last_begin(msgs)
+        #    stopping as soon as no remaining file can hold a nearer
+        #    BEGIN/COMMIT (on an LSN-ordered layout this is ≤1 extra file).
         earlier = sorted(
-            (f for f in partition.files if f[0] not in touched and f[1] is not None and f[1] <= start),
+            (f for f in partition.files if f[0] not in parsed and f[1] is not None and f[1] <= start),
             key=lambda f: f[2],
             reverse=True,
         )
-        for name, lo, hi in earlier:
-            if best is not None and hi <= best[0]:
+        while True:
+            msgs = sorted(
+                (m for name in sorted(parsed) for m in parsed[name]),
+                key=lambda m: (m[0], m[1]),
+            )
+            lsns = [m[0] for m in msgs]
+            i0 = bisect.bisect_right(lsns, start)
+            j, xid, tbk = assembly.enclosing_txn(msgs, i0)
+            if not earlier or (j >= 0 and earlier[0][2] < lsns[j]):
                 break
-            cand = last_begin(sorted(_parse_slot_file(os.path.join(slot_dir, name))))
-            if cand is not None and (best is None or cand[0] > best[0]):
-                best = cand
-        xid = tbk = None
-        if best is not None:
-            xid, tbk = best[1], f"{best[1]}-{best[0]}"
-        # 3. one Arrow batch per slot range: the columnar hop replaces
-        #    per-row tuple pickling (same upgrade as PgCdcParallelReader)
-        wal, tms, lines, xids, tbks = [], [], [], [], []
-        for lsn, time_ms, line in msgs:
-            if lsn <= start or lsn > end:
-                continue
-            head = line.split(" ", 2)
-            if head[0] == "BEGIN" and len(head) >= 2:
-                xid, tbk = head[1], f"{head[1]}-{lsn}"
-            wal.append(lsn)
-            tms.append(time_ms)
-            lines.append(line)
-            xids.append(xid)
-            tbks.append(tbk)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(wal, pa.int64()),
-                pa.array([w + 8 for w in wal], pa.int64()),
-                pa.array(tms, pa.int64()),
-                pa.array([partition.slot_idx] * len(wal), pa.int32()),
-                pa.array(lines, pa.string()),
-                pa.array(xids, pa.string()),
-                pa.array(tbks, pa.string()),
-            ],
-            names=[f.name for f in PGCDC_SCHEMA.fields],
-        )
+            name = earlier.pop(0)[0]
+            parsed[name] = _parse_slot_file(os.path.join(slot_dir, name))
+        # 3. one Arrow batch per slot range
+        rows: list = []
+        assembly.fold(msgs[i0 : bisect.bisect_right(lsns, end)], xid, tbk, rows)
+        yield assembly.arrow_batch(rows, partition.slot_idx)
 
     def commit(self, end: dict) -> None:
         """Per-slot standby-status ack, atomically for the batch."""

@@ -35,6 +35,8 @@ import time
 from collections import Counter
 from dataclasses import dataclass, field
 
+from . import assembly
+
 
 class Timeout(Exception):
     """Receive deadline expired (pgconn.Timeout equivalent)."""
@@ -169,12 +171,11 @@ class ReplicationClientLoop:
                 self.saw_commit = False
                 self.first_iteration = True
                 return []
-            parts = msg.line.split(" ", 2)
-            self.xid = parts[1] if len(parts) > 1 else None
-            # deterministic analog of the reference's nanosecond stamp:
-            # the BEGIN's LSN distinguishes temporal instances of the
-            # same xid on replay (client.go:513-518)
-            self.time_based_key = f"{self.xid}-{msg.wal_start}"
+            # the BEGIN's LSN keys the txn, distinguishing replays of
+            # the same xid (client.go:513-518)
+            self.xid, self.time_based_key = assembly.step(
+                msg.wal_start, msg.line, self.xid, self.time_based_key
+            )
             self.saw_commit = False
             self.first_iteration = False
 

@@ -9,9 +9,8 @@ so a module-level counter bumped there is invisible to
 ``drain_cdc_query``. The only signal channel that crosses that
 boundary is the OFFSET dict (``_Offset.trunc``), which Spark surfaces
 back to the driver through the progress log. This source truncates
-its first fetch *in whatever process the reader runs in* and does NOT
-touch the driver-side module counter, so a drain test passes only if
-the offset channel works.
+its first fetch *in whatever process the reader runs in*, so a drain
+test passes only if the offset channel works.
 
 Top-level package module (not a test file) so the DataSource class
 pickles into the data-source worker — same constraint as

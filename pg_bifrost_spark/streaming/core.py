@@ -140,7 +140,6 @@ def drain_cdc_query(
     cap = source.admission_cap(source_options or {})
     rounds = 0
     for _ in range(max_rounds):
-        truncs_before = pgcdc.truncation_events()
         q = start_cdc_query(
             spark, sink, checkpoint_dir, cfg=cfg, workers=workers,
             source_options=source_options, source=source,
@@ -160,13 +159,8 @@ def drain_cdc_query(
             # module counter bumped there is invisible here — the
             # reader folds the transport's truncation count into the
             # offset's ``trunc`` field, and this batch truncated iff
-            # end.trunc > start.trunc in lastProgress. The module
-            # counter is kept as a same-process fallback (tests,
-            # direct-transport drains).
-            if (
-                _progress_trunc_delta(progress) == 0
-                and pgcdc.truncation_events() == truncs_before
-            ):
+            # end.trunc > start.trunc in lastProgress.
+            if _progress_trunc_delta(progress) == 0:
                 break
     return rounds
 

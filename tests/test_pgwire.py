@@ -1178,8 +1178,9 @@ def test_equal_lsn_begin_and_first_change_both_admitted():
         rows = t.fetch(after_lsn=0, limit=100)
         assert [r[2].split(" ")[0] for r in rows] == ["BEGIN", "table", "COMMIT"]
         assert [r[0] for r in rows] == [5000, 5000, 5008]
-        # each frame carries its equal-LSN run index k (ADVICE r9)
-        assert [r[3] for r in rows] == [0, 1, 0]
+        # each frame carries its equal-LSN run index k (ADVICE r9); a
+        # COMMIT that opens its run takes no index (assembly.run_head_k)
+        assert [r[3] for r in rows] == [0, 1, -1]
         t.close()
     finally:
         srv.close()
@@ -1221,6 +1222,53 @@ def test_equal_lsn_batch_boundary_resumes_mid_run():
         legacy = t3.fetch(after_lsn=5000, limit=100)
         assert [r[0] for r in legacy] == [5008]
         t3.close()
+        assert srv.failures == [], srv.failures
+    finally:
+        srv.close()
+
+
+def test_resume_at_commit_admits_next_txn_begin():
+    """A batch that ends on a COMMIT at LSN X leaves the offset at X.
+    A walsender restarted at X does not resend that COMMIT, so the next
+    transaction's BEGIN (stamped with the same X) is the first frame of
+    the new connection's run. The resume position must still admit it:
+    the reader, not the run index, decides what was consumed."""
+    from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader
+
+    scripts = [
+        [
+            ("xlog", 4992, "BEGIN 41"),
+            ("xlog", 4992, "table public.t: INSERT: id[integer]:1"),
+            ("xlog", 5000, "COMMIT 41"),
+        ],
+        [
+            ("xlog", 5000, "BEGIN 42"),
+            ("xlog", 5000, "table public.t: INSERT: id[integer]:2"),
+            ("xlog", 5008, "COMMIT 42"),
+        ],
+    ]
+    srv = FakeWalsender(frames_per_conn=scripts)
+    opts = {
+        "dsn": f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}",
+        "slot": "s_resume_commit",
+        "max_msgs_per_batch": "3",
+    }
+    try:
+        r1 = PgCdcSimpleReader(opts)
+        rows, end = r1.read(r1.initialOffset())
+        assert [r[4] for r in rows][-1] == "COMMIT 41"
+        r1.commit(end)
+        r1.transport.close()
+
+        r2 = PgCdcSimpleReader(opts)  # a new query: a new connection
+        rows, _ = r2.read(end)
+        r2.transport.close()
+        assert [(r[0], r[4].split(" ")[0], r[5]) for r in rows] == [
+            (5000, "BEGIN", "42"),
+            (5000, "table", "42"),
+            (5008, "COMMIT", "42"),
+        ]
+        assert srv.start_lsns == [0, 5000]
         assert srv.failures == [], srv.failures
     finally:
         srv.close()

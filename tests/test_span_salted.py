@@ -1,9 +1,7 @@
-"""Span-counting arm equivalence: the default window shape, the r13
-count-join alternative (``count_join=True`` — measured slower, kept as
-the adjudication pin in ``_mark_span_counts``), and the skew-bounded
-salted two-level shape (``salts=S``, VERDICT r6 ask #4) must all be
-pure plan-shape changes: byte-identical results on a fixture with a
-genuinely hot span."""
+"""Span-counting arm equivalence: the default window shape and the
+skew-bounded salted two-level shape (``salts=S``, VERDICT r6 ask #4)
+must be pure plan-shape changes: byte-identical results on a fixture
+with a genuinely hot span."""
 
 from __future__ import annotations
 
@@ -56,17 +54,12 @@ def test_salted_stats_identical(spark):
         (r.doc_id, r.n_spans, r.n_repeated, r.repeat_ratio)
         for r in repeated_span_stats(docs).collect()
     }
-    plans.release_caches()
-    alt = {
-        (r.doc_id, r.n_spans, r.n_repeated, r.repeat_ratio)
-        for r in repeated_span_stats(docs, count_join=True).collect()
-    }
     salted = {
         (r.doc_id, r.n_spans, r.n_repeated, r.repeat_ratio)
         for r in repeated_span_stats(docs, salts=7).collect()
     }
     plans.release_caches()
-    assert base and base == salted and base == alt
+    assert base and base == salted
     # the hot docs really are flagged (the fixture has corpus repeats)
     assert sum(1 for d, *_ in base if d % 10 < 3) == 60
 
@@ -77,17 +70,12 @@ def test_salted_removal_identical(spark):
         (r.doc_id, r.n_tokens, r.n_removed, r.cleaned_text)
         for r in remove_repeated_spans(docs).collect()
     }
-    plans.release_caches()
-    alt = {
-        (r.doc_id, r.n_tokens, r.n_removed, r.cleaned_text)
-        for r in remove_repeated_spans(docs, count_join=True).collect()
-    }
     salted = {
         (r.doc_id, r.n_tokens, r.n_removed, r.cleaned_text)
         for r in remove_repeated_spans(docs, salts=7).collect()
     }
     plans.release_caches()
-    assert base and base == salted and base == alt
+    assert base and base == salted
     # an all-hot doc is cut to empty (every token covered)
     hot = {r for r in base if r[0] % 10 < 3}
     assert hot and all(r[3] == "" and r[1] == r[2] for r in hot)

@@ -308,42 +308,14 @@ def test_drain_recovers_uncommitted_batch(spark, tmp_path):
     assert got == sorted(str(i) for i in range(8)), got
 
 
-def test_drain_runs_extra_round_after_truncated_batch(spark, tmp_path):
-    """An under-cap batch proves the backlog empty ONLY when it was
-    not truncated (live fetch budget / reconnect-exhausted partial
-    batch — code-review r9). A truncation event during the round must
-    buy one more drain round instead of a silent early stop."""
-    from pg_bifrost_spark.sources import pgcdc
-    from pg_bifrost_spark.streaming.core import drain_cdc_query
-
-    ops = txn(700, dml_line("public.t", "INSERT", [("id", "integer", 1)]))
-    wal_dir = write_replay_dir(tmp_path, ops)
-    bumped = {"done": False}
-
-    def sink(df, epoch_id):
-        df.collect()
-        if not bumped["done"]:
-            # simulate the live transport flagging this round truncated
-            pgcdc._note_truncation()
-            bumped["done"] = True
-
-    rounds = drain_cdc_query(
-        spark, sink, str(tmp_path / "ckpt"), source_options={"wal_dir": wal_dir}
-    )
-    # round 1: under-cap BUT truncated -> continue; round 2: under-cap,
-    # clean -> stop. Without the truncation check this would be 1.
-    assert rounds == 2
-
-
 def test_drain_sees_truncation_across_process_boundary(spark, tmp_path):
     """ADVICE r9 (high): the reader runs inside PySpark's data-source
     worker process, so a module counter bumped by the transport there
     is INVISIBLE to the drain loop in the driver process. The signal
     must ride the offset (``trunc`` field → lastProgress). This twin
-    truncates its first fetch in whatever process the reader runs in
-    and never touches the driver-side counter — the drain recovers the
-    cut-off backlog only if the offset channel works."""
-    from pg_bifrost_spark.sources import pgcdc
+    truncates its first fetch in whatever process the reader runs in —
+    the drain recovers the cut-off backlog only if the offset channel
+    works."""
     from pg_bifrost_spark.sources.testing import TruncatingReplaySource
     from pg_bifrost_spark.streaming.core import drain_cdc_query
 
@@ -358,7 +330,6 @@ def test_drain_sees_truncation_across_process_boundary(spark, tmp_path):
     def sink(df, epoch_id):
         seen.extend(r.json for r in df.collect() if r.json)
 
-    counter_before = pgcdc.truncation_events()
     rounds = drain_cdc_query(
         spark,
         sink,
@@ -366,9 +337,6 @@ def test_drain_sees_truncation_across_process_boundary(spark, tmp_path):
         source_options={"wal_dir": wal_dir},
         source=TruncatingReplaySource,
     )
-    # the driver-process module counter never moved — the offset dict
-    # was the only channel that could have carried the signal
-    assert pgcdc.truncation_events() == counter_before
     # round 1 delivered 2 of 6 (truncated, under cap); without the
     # offset channel the drain would stop there with backlog remaining
     assert rounds >= 2
