@@ -311,7 +311,7 @@ DEGRADED_BUDGET_S = 180.0
 
 def bench_streaming(spark, sf_dir: str) -> dict:
     """Time the ACTUAL streaming path — spark.readStream over the pgcdc
-    source (replay transport) → run_pipeline_assembled → foreachBatch
+    source (replay transport) → run_pipeline → foreachBatch
     noop sink — over a WAL corpus derived from the bench-SF lineitem.
     This is the reference's own workload shape (its floor:
     50 k msgs ≤ 180 s, BASELINE.md); the batch roundtrip measures the

@@ -162,8 +162,8 @@ def wal_lines_from_table(
     )
     if with_txn:
         # the generator IS an assembling source (each txn rendered
-        # whole), so it can stamp txn identity directly — downstream
-        # uses run_pipeline_assembled: no post-render shuffle, no
+        # whole), so it can stamp txn identity directly — run_pipeline
+        # then skips window assembly: no post-render shuffle, no
         # window sort. This is the same contract the streaming pgcdc
         # reader provides.
         return out

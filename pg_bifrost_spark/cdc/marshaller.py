@@ -152,13 +152,13 @@ def envelope_json_expr(no_marshal_old_value: bool = False) -> Column:
     ).otherwise(F.to_json(envelope_struct_expr(no_marshal_old_value)))
 
 
-def marshal(df: DataFrame, no_marshal_old_value: bool = False) -> DataFrame:
-    """Event DataFrame → + ``json`` payload column (MarshalledMessage,
-    ``marshaller/marshalled_message.go:21-29``)."""
+def _select_marshalled(df: DataFrame, payload: Column) -> DataFrame:
+    """The MarshalledMessage column list around one payload column
+    (``marshaller/marshalled_message.go:21-29``)."""
     return df.select(
         "operation",
         F.col("relation").alias("table"),
-        envelope_json_expr(no_marshal_old_value).alias("json"),
+        payload,
         "time_based_key",
         "wal_start",
         F.col("txn_id").alias("transaction"),
@@ -167,6 +167,12 @@ def marshal(df: DataFrame, no_marshal_old_value: bool = False) -> DataFrame:
         # time-partitioned layout keys off it (K5)
         "server_time_ms",
     )
+
+
+def marshal(df: DataFrame, no_marshal_old_value: bool = False) -> DataFrame:
+    """Event DataFrame → + ``json`` payload column (MarshalledMessage,
+    ``marshaller/marshalled_message.go:21-29``)."""
+    return _select_marshalled(df, envelope_json_expr(no_marshal_old_value).alias("json"))
 
 
 def marshal_structs(df: DataFrame, no_marshal_old_value: bool = False) -> DataFrame:
@@ -184,13 +190,4 @@ def marshal_structs(df: DataFrame, no_marshal_old_value: bool = False) -> DataFr
     env = F.when(
         F.col("operation").isin("BEGIN", "COMMIT"), F.lit(None)
     ).otherwise(envelope_struct_expr(no_marshal_old_value))
-    return df.select(
-        "operation",
-        F.col("relation").alias("table"),
-        env.alias("env"),
-        "time_based_key",
-        "wal_start",
-        F.col("txn_id").alias("transaction"),
-        "partition_key",
-        "server_time_ms",
-    )
+    return _select_marshalled(df, env.alias("env"))

@@ -7,6 +7,12 @@ channel-wired app (``app/runner.go:269-301``):
     Replication Client → Filter → Partitioner → Marshaller → Batcher →
     Transporter, with the Progress Tracker closing the ack loop
 
+There is one parse stage (``parse_raw``) and one entry point
+(``run_pipeline``) for batch replay, the bridge plans and the
+streaming sink alike; whether transactions still need assembling is
+read off the input's columns (an assembling source stamps
+``txn_id``/``time_based_key`` itself).
+
 Catalyst gives us the reference's hand-built physical tricks for free
 (filter-before-serialize ordering, column pruning, pipelining —
 SURVEY.md §4 X1-X8); Structured Streaming's offset/commit log plays the
@@ -23,7 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.barrier import opt_barrier
 from .fastparse import jvm_parse, jvm_parseable
 from .filtering import table_filter_predicate
-from .marshaller import marshal, marshal_structs
+from .marshaller import marshal
 from .parser import PARSED_ASSEMBLED_SCHEMA_DDL, PARSED_SCHEMA_DDL, parse_lines_to_pandas
 from .partitioner import partition_key_expr
 
@@ -53,10 +59,15 @@ def _parse_eligibility(df_lines: DataFrame) -> F.Column:
     return jvm_parseable(F.col("line"))
 
 
-def parse_raw(df_lines: DataFrame) -> DataFrame:
+def parse_raw(df_lines: DataFrame, barrier: bool = True) -> DataFrame:
     """Raw (wal_start, server_wal_end, server_time_ms, line) → parsed
     messages. Malformed lines are dropped and counted via an observable
     metric (reference counts+drops at ``client.go:470-482``).
+
+    Input that already carries ``txn_id``/``time_based_key`` (the
+    streaming pgcdc reader, the WAL generators and the pgoutput decoder
+    stamp them) keeps both columns through the parse, and the control
+    lines' ``txn_xid`` is dropped: assembly already happened.
 
     Two-branch split: control lines and fast-path-eligible DML parse
     entirely JVM-side inside whole-stage codegen (``fastparse.py``);
@@ -66,23 +77,43 @@ def parse_raw(df_lines: DataFrame) -> DataFrame:
     Both branches re-execute their common input subtree (two filters
     over one source — Catalyst shares no work across them), so a
     caller whose lines are EXPENSIVE to produce should materialize
-    them first (the bridge plans cache rendered/decoded lines) and may
-    precompute the eligibility bit as a ``_able`` column — the split
-    then filters on the stored boolean instead of running the
-    eligibility regex once per branch (r12, guide §2.4: the regex was
-    the largest re-executed expression left after the caches)."""
+    them first (the bridge plans cache rendered/decoded lines, the
+    streaming sink persists each micro-batch) and may precompute the
+    eligibility bit as a ``_able`` column — the split then filters on
+    the stored boolean instead of running the eligibility regex once
+    per branch (r12, guide §2.4: the regex was the largest re-executed
+    expression left after the caches).
+
+    ``barrier=False`` is for consumers that reference the parsed
+    column maps AT MOST ONCE downstream (or not at all): the barrier
+    exists solely to stop CollapseProject inlining the interpreted
+    map-build into multiple extraction sites, and it also blocks
+    column pruning (the documented trade-off in functions/barrier.py)
+    — a consumer that never reads ``columns``/``old_columns`` (e.g.
+    the partition-key bounds check) should let Catalyst prune the
+    whole tokenize+map build out of its plan instead (guide §2.3
+    don't-compute-what-you-throw-away)."""
     import uuid
 
+    txn_cols = [c for c in ("txn_id", "time_based_key") if c in df_lines.columns]
+    if len(txn_cols) == 1:
+        raise ValueError(
+            f"assembled input needs both txn_id and time_based_key, got only {txn_cols[0]}"
+        )
     able = _parse_eligibility(df_lines)
-    fast = jvm_parse(df_lines.filter(able).drop("_able"))
-    slow = df_lines.filter(~able).drop("_able").mapInPandas(
-        parse_lines_to_pandas, schema=PARSED_SCHEMA_DDL
-    )
-    # barrier: the fast branch's token fold must evaluate ONCE per row.
-    # Without it, CollapseProject inlines the fold into every downstream
-    # reference (columns / old_columns / envelope JSON) — measured 3×
-    # the work on the roundtrip bench (see functions/barrier.py).
-    parsed = opt_barrier(fast.unionByName(slow))
+    fast = jvm_parse(df_lines.filter(able).drop("_able"), passthrough=txn_cols)
+    schema = PARSED_ASSEMBLED_SCHEMA_DDL if txn_cols else PARSED_SCHEMA_DDL
+    slow = df_lines.filter(~able).drop("_able").mapInPandas(parse_lines_to_pandas, schema=schema)
+    parsed = fast.unionByName(slow)
+    if txn_cols:
+        parsed = parsed.drop("txn_xid")
+    if barrier:
+        # the fast branch's token fold must evaluate ONCE per row.
+        # Without it, CollapseProject inlines the fold into every
+        # downstream reference (columns / old_columns / envelope JSON)
+        # — measured 3× the work on the roundtrip bench (see
+        # functions/barrier.py).
+        parsed = opt_barrier(parsed)
     # unique observation name: two pipeline instances may meet in one
     # plan (e.g. snapshot apply), and observation names must not collide
     return parsed.observe(
@@ -147,90 +178,29 @@ def filter_partition(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def filter_partition_marshal(events: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Stateless tail of the pipeline (filter → partition key →
-    envelope). Works identically on batch and streaming DataFrames —
-    every expression is per-row, so Structured Streaming runs the same
-    plan per micro-batch with no state."""
+def run_pipeline(df_lines: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+    """The pipeline's one entry point, batch and streaming alike: raw
+    WAL lines → parse → (assembly) → filter → partition key →
+    envelope. Returns MarshalledMessage rows (json is null for
+    BEGIN/COMMIT control rows, which sinks exclude from payloads —
+    ``transport/batch/generic_batch.go:33-36``).
+
+    Window assembly runs only when the input has no ``txn_id``: the
+    streaming pgcdc source assembles transactions inside its
+    sequential reader (exactly where the reference does it,
+    ``client.go:487-545``), so the window is a batch/replay
+    convenience for raw lines. Every other stage is per-row, so
+    Structured Streaming runs the same plan per micro-batch with no
+    state."""
+    cfg = cfg or PipelineConfig()
+    events = parse_raw(df_lines)
+    if "txn_id" not in df_lines.columns:
+        events = assemble_transactions(events)
     return marshal(filter_partition(events, cfg), cfg.no_marshal_old_value)
 
 
-def run_pipeline(df_lines: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """Full batch pipeline over raw WAL lines. Returns
-    MarshalledMessage rows (json is null for BEGIN/COMMIT control
-    rows, which sinks exclude from payloads —
-    ``transport/batch/generic_batch.go:33-36``).
-
-    Streaming variant: the pgcdc source (sources/pgcdc.py) assembles
-    transactions inside its sequential reader (exactly where the
-    reference does it, ``client.go:487-545``) and feeds
-    ``run_pipeline_assembled`` — window-based assembly is a
-    batch/replay convenience only."""
-    cfg = cfg or PipelineConfig()
-    events = assemble_transactions(parse_raw(df_lines))
-    return filter_partition_marshal(events, cfg)
-
-
-def _parse_assembled(df_lines_with_txn: DataFrame, barrier: bool = True) -> DataFrame:
-    """Shared parse stage for pre-assembled inputs (RAW_LINE_SCHEMA +
-    txn_id + time_based_key): fast/slow split, barrier, parse-error
-    drop. One definition so the json and struct pipeline entry points
-    can never drift (ADVICE r3).
-
-    Control lines (BEGIN/COMMIT — two thirds of a typical stream) and
-    fast-grammar DML lines parse entirely JVM-side inside whole-stage
-    codegen (fastparse.py); only lines outside the fast grammar pay
-    the Python (Arrow) hop — ~zero on a typical stream. The barrier is
-    the same once-per-row guard as parse_raw (functions/barrier.py).
-
-    ``barrier=False`` is for consumers that reference the parsed
-    column maps AT MOST ONCE downstream (or not at all): the barrier
-    exists solely to stop CollapseProject inlining the interpreted
-    map-build into multiple extraction sites, and it also blocks
-    column pruning (the documented trade-off in functions/barrier.py)
-    — a consumer that never reads ``columns``/``old_columns`` (e.g.
-    the partition-key bounds check) should let Catalyst prune the
-    whole tokenize+map build out of its plan instead (guide §2.3
-    don't-compute-what-you-throw-away)."""
-    able = _parse_eligibility(df_lines_with_txn)
-    fast = jvm_parse(
-        df_lines_with_txn.filter(able).drop("_able"),
-        passthrough=["txn_id", "time_based_key"],
-    ).drop("txn_xid")
-    slow = (
-        df_lines_with_txn.filter(~able)
-        .drop("_able")
-        .mapInPandas(parse_lines_to_pandas, schema=PARSED_ASSEMBLED_SCHEMA_DDL)
-        .drop("txn_xid")
-    )
-    parsed = fast.unionByName(slow)
-    if barrier:
-        parsed = opt_barrier(parsed)
-    return parsed.filter(F.col("parse_error").isNull())
-
-
-def run_pipeline_assembled(
-    df_lines_with_txn: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """Pipeline for sources that already stamp txn_id/time_based_key
-    per message (the streaming pgcdc source assembles transactions in
-    its sequential reader). Input: RAW_LINE_SCHEMA + txn_id +
-    time_based_key. Every stage is stateless → valid on a streaming
-    DataFrame."""
-    cfg = cfg or PipelineConfig()
-    return filter_partition_marshal(_parse_assembled(df_lines_with_txn), cfg)
-
-
-def run_pipeline_assembled_structs(
-    df_lines_with_txn: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """``run_pipeline_assembled`` with the envelope kept as a STRUCT
-    column ``env`` (see ``marshal_structs``) — for high-volume in-plan
-    consumers that would otherwise pay to_json + from_json on every
-    row just to extract fields again."""
-    cfg = cfg or PipelineConfig()
-    events = _parse_assembled(df_lines_with_txn)
-    return marshal_structs(filter_partition(events, cfg), cfg.no_marshal_old_value)
+# cdcbench/ imports this name and may not be edited: keep it as an alias
+run_pipeline_assembled = run_pipeline
 
 
 def data_messages(marshalled: DataFrame) -> DataFrame:

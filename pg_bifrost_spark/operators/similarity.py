@@ -235,10 +235,13 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The embeddings fixture dimension. Already assumed module-wide by the
-# PQ split (PQ_M sub-vectors x PQ_SUB dims each); _centroids builds one
-# avg aggregate per dimension from it.
-EMB_DIM = 64
+# Product-quantization split of the embeddings (see the PQ section
+# below): PQ_M sub-vectors x PQ_SUB dims each. Their product is the
+# embedding dimension every IVF/PQ path assumes; _centroids builds one
+# avg aggregate per dimension from it and rejects any other length.
+PQ_M = 8          # sub-vectors (64-dim fixture -> 8 dims each)
+PQ_SUB = 8
+EMB_DIM = PQ_M * PQ_SUB
 
 
 def _centroids(emb: DataFrame) -> DataFrame:
@@ -251,11 +254,18 @@ def _centroids(emb: DataFrame) -> DataFrame:
     an exchange, a x64 row fan-out, and an AQE stage from a path that
     executes as a driver-blocking collect in every IVF query (the
     ann_ivf_pq decomposition measured the old chain at 4 scheduling
-    round-trips for 0.5-0.8 s on 2000 vectors)."""
+    round-trips for 0.5-0.8 s on 2000 vectors).
+
+    A vector whose length is not ``EMB_DIM`` fails the aggregation
+    loudly (a shorter one would otherwise hit an index error, a longer
+    one would be silently truncated); the check rides the same pass,
+    and a NULL vector still contributes nothing."""
+    v = F.when(
+        F.size("v") != EMB_DIM,
+        F.raise_error(F.lit(f"_centroids: embedding dimension is not {EMB_DIM}")),
+    ).otherwise(F.col("v"))
     return emb.groupBy("label").agg(
-        F.array(
-            *[F.avg(F.element_at(F.col("v"), i + 1)) for i in range(EMB_DIM)]
-        ).alias("centroid")
+        F.array(*[F.avg(F.element_at(v, i + 1)) for i in range(EMB_DIM)]).alias("centroid")
     )
 
 
@@ -508,8 +518,6 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identically (d2 = 2 - 2*cos). Codebooks inherit kmeans_codebook's
 # float-accumulation caveat -> rows-only registration, recall pinned
 # by tests (the ivf_kmeans_codebook precedent).
-PQ_M = 8          # sub-vectors (64-dim fixture -> 8 dims each)
-PQ_SUB = 8
 PQ_K = 16         # centroids per sub-space (codes fit a nibble+)
 PQ_REFINE = 50    # ADC candidate pool exact-reranked
 

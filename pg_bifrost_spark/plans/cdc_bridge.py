@@ -16,12 +16,13 @@ from pyspark.sql import functions as F
 from . import register, table, tracked_cache
 from ..cdc.fastparse import jvm_parseable
 from ..cdc.fixtures import wal_lines_from_table
+from ..cdc.marshaller import marshal_structs
 from ..cdc.pipeline import (
     PipelineConfig,
     data_messages,
+    filter_partition,
+    parse_raw,
     run_pipeline,
-    run_pipeline_assembled,
-    run_pipeline_assembled_structs,
 )
 from ..functions.barrier import opt_barrier
 
@@ -102,7 +103,7 @@ def _lineitem_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lineitem_marshalled(spark: SparkSession, sf_dir: str, cfg: PipelineConfig) -> DataFrame:
-    return run_pipeline_assembled(_lineitem_raw(spark, sf_dir), cfg)
+    return run_pipeline(_lineitem_raw(spark, sf_dir), cfg)
 
 
 @register(
@@ -131,8 +132,8 @@ def cdc_lineitem_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate's struct shortcut). The barrier makes the envelope build
     evaluate once per row, not once per extracted field
     (CollapseProject)."""
-    out = run_pipeline_assembled_structs(
-        _lineitem_raw(spark, sf_dir), PipelineConfig()
+    out = marshal_structs(
+        filter_partition(parse_raw(_lineitem_raw(spark, sf_dir)), PipelineConfig())
     )
     env = opt_barrier(out.filter(F.col("env").isNotNull()).select("env"))
     cols = F.col("env.columns")
@@ -242,7 +243,7 @@ def cdc_events_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_expr="event_id",
         with_txn=True,
     )
-    out = data_messages(run_pipeline_assembled(_cached_lines(raw), PipelineConfig()))
+    out = data_messages(run_pipeline(_cached_lines(raw), PipelineConfig()))
     env = _env_once(out)
     cols = F.col("env.columns")
 
@@ -280,7 +281,7 @@ def cdc_to_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_expr="event_id",
         with_txn=True,
     )
-    out = data_messages(run_pipeline_assembled(_cached_lines(raw), PipelineConfig()))
+    out = data_messages(run_pipeline(_cached_lines(raw), PipelineConfig()))
     env = _env_once(out)
     cols = F.col("env.columns")
 
@@ -349,7 +350,7 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # envelope bytes are identical (guide §2.4; window-based assembly
     # keeps gate coverage via the pgoutput/two-phase roundtrips and
     # cdc_whitelist_filter)
-    marshalled = run_pipeline_assembled(_cached_lines(raw), PipelineConfig())
+    marshalled = run_pipeline(_cached_lines(raw), PipelineConfig())
     upserts = changes_to_upserts(marshalled, pk="n_nationkey")
     snapshot = apply_changes(None, upserts, pk="n_nationkey")
     return snapshot_as_columns(
@@ -441,7 +442,7 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = v1.unionByName(v2).unionByName(v3)
     # r12: generator-stamped txns → assembled pipeline (no window
     # shuffle; see cdc_apply_snapshot's note — identical output)
-    env = _env_once_with_lsn(run_pipeline_assembled(_cached_lines(raw), PipelineConfig()))
+    env = _env_once_with_lsn(run_pipeline(_cached_lines(raw), PipelineConfig()))
     cols = F.col("env.columns")
 
     def v(name: str) -> F.Column:
@@ -496,15 +497,14 @@ def cdc_partition_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (envelope_json_expr). Output rows are byte-identical (oracle
     re-proven at both gate SFs); the envelope layer keeps its own
     volume gates (cdc_lineitem_roundtrip, cdc_envelope_counts)."""
-    from ..cdc.pipeline import _parse_assembled, filter_partition
-
     # barrier=False (r12): this consumer never reads columns/
-    # old_columns, and every column it does read (operation, txn_id,
-    # parse_error) is referenced once — so instead of the barrier
-    # (which blocks pruning), let Catalyst prune the interpreted
-    # tokenize+map build out of the plan entirely (guide §2.3)
+    # old_columns, and the columns it does read are cheap (operation,
+    # txn_id, and parse_error — a literal NULL on the fast branch, read
+    # by the parse counter and the error drop) — so instead of the
+    # barrier (which blocks pruning), let Catalyst prune the
+    # interpreted tokenize+map build out of the plan entirely (guide §2.3)
     events = filter_partition(
-        _parse_assembled(_lineitem_raw(spark, sf_dir), barrier=False),
+        parse_raw(_lineitem_raw(spark, sf_dir), barrier=False),
         PipelineConfig(partition_method="transaction-bucket", partition_buckets=8),
     )
     out = events.filter(~F.col("operation").isin("BEGIN", "COMMIT"))
@@ -585,7 +585,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = inserts.unionByName(evolved)
     # r12: generator-stamped txns → assembled pipeline (no window
     # shuffle; see cdc_apply_snapshot's note — identical output)
-    marshalled = run_pipeline_assembled(_cached_lines(raw), PipelineConfig())
+    marshalled = run_pipeline(_cached_lines(raw), PipelineConfig())
     upserts = changes_to_upserts(marshalled, pk="n_nationkey")
     snapshot = apply_changes(None, upserts, pk="n_nationkey")
     return snapshot_as_columns(

@@ -19,10 +19,9 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import register, table, tracked_cache
-from ..cdc.fastparse import jvm_parseable
-from ..cdc.pipeline import PipelineConfig, data_messages, run_pipeline_assembled
-from .cdc_bridge import _env_once
+from . import register, table
+from ..cdc.pipeline import PipelineConfig, data_messages, run_pipeline
+from .cdc_bridge import _cached_lines, _env_once
 
 N_STREAMS = 64
 # Minimum LSN gap between consecutive frames in a generated stream.
@@ -247,30 +246,23 @@ def cdc_pgoutput_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pgoutput.py::test_live_transport_pgoutput_end_to_end."""
     orders = table(spark, sf_dir, "orders")
     frames = pgoutput_frames_from_orders(orders)
-    # cache the decoded lines: run_pipeline's fast/slow parse split
-    # references its input twice, and without this the encode+decode
-    # Arrow kernels execute TWICE (no exchange reuse across the two
-    # filter branches — measured 24.3 s vs 9.5 s at sf0.1, r11). The
-    # cache is line-sized (not frame-sized) and released by
-    # release_caches(); a 100 TB deployment spills via
-    # MEMORY_AND_DISK or checkpoints the decode output the same way.
+    # cache the decoded lines with their fast-path eligibility bit
+    # (_cached_lines): the parse stage's fast/slow split references
+    # its input twice, and without this the encode+decode Arrow
+    # kernels execute TWICE (no exchange reuse across the two filter
+    # branches — measured 24.3 s vs 9.5 s at sf0.1, r11). The cache is
+    # line-sized (not frame-sized) and released by release_caches(); a
+    # 100 TB deployment spills via MEMORY_AND_DISK or checkpoints the
+    # decode output the same way.
     # r12: the decoder stamps txn identity itself (with_txn=True — it
     # is sequential per stream, the same contract the generators and
-    # the streaming reader provide), so the assembled pipeline runs
-    # with NO window exchange+sort over the line stream; stamping
+    # the streaming reader provide), so run_pipeline sees txn_id and
+    # runs with NO window exchange+sort over the line stream; stamping
     # equality vs assemble_transactions is pinned by
     # test_pgoutput.py::test_with_txn_stamping_matches_window, and the
     # window path keeps gate coverage via cdc_whitelist_filter.
-    raw = tracked_cache(
-        decode_pgoutput_frames(frames, with_txn=True).withColumn(
-            # r12: precompute the fast-path eligibility bit INTO the
-            # cache — the parse split's two branches then filter on the
-            # stored boolean instead of each re-running the eligibility
-            # regex over every cached line (guide §2.4)
-            "_able", jvm_parseable(F.col("line"))
-        )
-    )
-    out = data_messages(run_pipeline_assembled(raw, PipelineConfig()))
+    raw = _cached_lines(decode_pgoutput_frames(frames, with_txn=True))
+    out = data_messages(run_pipeline(raw, PipelineConfig()))
     env = _env_once(out)
     cols = F.col("env.columns")
 
@@ -358,12 +350,8 @@ def cdc_two_phase_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with_txn=True: decoder-side txn stamping, no window assembly
     # (r12 — see cdc_pgoutput_roundtrip; the 2PC replay's BEGIN lines
     # drive the same per-stream stamping state)
-    raw = tracked_cache(
-        decode_pgoutput_frames(frames, proto_version=3, with_txn=True).withColumn(
-            "_able", jvm_parseable(F.col("line"))  # r12, as above
-        )
-    )
-    out = data_messages(run_pipeline_assembled(raw, PipelineConfig()))
+    raw = _cached_lines(decode_pgoutput_frames(frames, proto_version=3, with_txn=True))
+    out = data_messages(run_pipeline(raw, PipelineConfig()))
     env = _env_once(out)
     cols = F.col("env.columns")
 

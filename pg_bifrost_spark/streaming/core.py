@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..cdc.pipeline import PipelineConfig, run_pipeline_assembled
+from ..cdc.pipeline import PipelineConfig, run_pipeline
 from ..sources import pgcdc
 
 
@@ -63,7 +63,7 @@ def start_cdc_query(
     stream = read_cdc_stream(spark, source=source, **(source_options or {}))
 
     def run_sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # The parse stage's fast/slow split (``_parse_assembled``)
+        # The parse stage's fast/slow split (``parse_raw``)
         # references its input twice; on a streaming plan each
         # reference re-executes the Python source's read(). Applying
         # the (stateless) pipeline inside foreachBatch over a
@@ -74,7 +74,7 @@ def start_cdc_query(
         # computation the pre-sink streaming plan declared.
         batch_df.persist()
         try:
-            out = run_pipeline_assembled(batch_df, cfg)
+            out = run_pipeline(batch_df, cfg)
             out = strict_order(out, workers) if workers else out
             sink(out, epoch_id)
         finally:

@@ -111,15 +111,23 @@ def test_ineligible_routes_to_python(spark):
     assert not any(flags), "no ineligible line may take the fast path"
 
 
-def test_parse_raw_end_to_end_mixed(spark):
+@pytest.mark.parametrize("shape", ["raw", "assembled"])
+def test_parse_raw_end_to_end_mixed(spark, shape):
     """parse_raw over a mixed eligible/ineligible/control stream equals
     the Python scanner on every surviving line, and drops exactly the
-    error lines."""
+    error lines. On assembled input (lines already stamped with
+    txn_id/time_based_key) both columns come through unchanged from
+    the JVM branch and the Python branch alike."""
     lines = ELIGIBLE + CONTROL + INELIGIBLE
+    df = _rows_df(spark, lines)
+    if shape == "assembled":
+        df = df.withColumn("txn_id", F.concat(F.lit("x"), F.col("wal_start").cast("string")))
+        df = df.withColumn("time_based_key", F.concat(F.lit("t"), F.col("wal_start").cast("string")))
     out = {
         r["wal_start"]: r.asDict(recursive=True)
-        for r in parse_raw(_rows_df(spark, lines)).collect()
+        for r in parse_raw(df).collect()
     }
+    branches = set()
     for i, line in enumerate(lines):
         pr = parse_line(line)
         key = 1000 + 8 * i
@@ -129,10 +137,16 @@ def test_parse_raw_end_to_end_mixed(spark):
         r = out[key]
         assert r["operation"] == pr.operation, line
         assert r["relation"] == pr.relation, line
-        assert r["txn_xid"] == pr.transaction, line
+        if shape == "raw":
+            assert r["txn_xid"] == pr.transaction, line
+        else:
+            assert "txn_xid" not in r, line
+            assert (r["txn_id"], r["time_based_key"]) == (f"x{key}", f"t{key}"), line
+            branches.add("python" if line in INELIGIBLE else "jvm")
         assert r["no_tuple_data"] == pr.no_tuple_data, line
         assert (r["columns"] or {}) == _as_map(pr.columns), line
         assert (r["old_columns"] or {}) == _as_map(pr.old_columns), line
+    assert shape == "raw" or branches == {"jvm", "python"}
 
 
 def test_fast_path_covers_generated_fixtures(spark):

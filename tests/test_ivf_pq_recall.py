@@ -8,6 +8,8 @@ floor sits at/below the looser of its parents' floors
 
 from __future__ import annotations
 
+import pytest
+
 import pg_bifrost_spark.plans as plans
 
 plans.load_all()
@@ -76,3 +78,29 @@ def test_ivf_pq_candidates_come_from_probed_cells_only(spark):
 
     got = {r.vec_id for r in ivf_pq_topk(spark, SF).collect()}
     assert got and all(cells[v] in probed for v in got)
+
+
+def test_centroids_reject_wrong_dimension(spark):
+    """The IVF codebook build fails loudly on a vector that is not
+    EMB_DIM long (a 32-dim one used to hit an index error, a 96-dim
+    one was silently truncated to 64), and the 64-dim fixture still
+    yields the per-label mean vectors."""
+    from pyspark.sql import functions as F
+
+    from pg_bifrost_spark.operators.similarity import EMB_DIM, _centroids, _prepared
+
+    emb = _prepared(spark, SF).select("label", "v")
+    short = emb.select("label", F.slice("v", 1, 32).alias("v"))
+    long_ = emb.select("label", F.concat("v", F.slice("v", 1, 32)).alias("v"))
+    for bad in (short, long_):
+        with pytest.raises(Exception, match=f"embedding dimension is not {EMB_DIM}"):
+            _centroids(bad).collect()
+
+    by_label: dict = {}
+    for r in emb.collect():
+        by_label.setdefault(r.label, []).append(r.v)
+    got = {r.label: r.centroid for r in _centroids(emb).collect()}
+    assert set(got) == set(by_label)
+    for label, vecs in by_label.items():
+        mean = [sum(col) / len(vecs) for col in zip(*vecs)]
+        assert got[label] == pytest.approx(mean, rel=1e-9, abs=1e-12), label

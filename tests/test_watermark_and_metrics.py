@@ -80,3 +80,31 @@ def test_invalid_message_counter_observed(spark):
     kept = observed.filter(F.col("parse_error").isNull()).count()
     assert kept == 3
     assert obs.get["invalid_msgs"] == 2
+
+
+def test_poison_line_counted_on_assembled_path(spark):
+    """Lines the source already stamped with txn identity (the streaming
+    pgcdc reader's shape) run the same parse stage as raw lines: a
+    malformed line is dropped AND counted, and the surviving rows keep
+    the source's txn_id/time_based_key (no window re-assembly)."""
+    from pg_bifrost_spark.cdc.pipeline import PipelineConfig, run_pipeline
+    from pg_bifrost_spark.sources.pgcdc import PGCDC_SCHEMA
+
+    lines = [
+        "BEGIN 42",
+        "table public.t: INSERT: id[integer]:1",
+        "table public.t: INSERT: bad",  # malformed: no value
+        'table "Odd Table": INSERT: id[integer]:2',  # Python branch
+        "COMMIT 42",
+    ]
+    tbk = "42-1700000000000000000"  # receipt-time key, not the BEGIN LSN
+    rows = [(1000 + 8 * i, 1008 + 8 * i, 0, 0, ln, "42", tbk) for i, ln in enumerate(lines)]
+    out = run_pipeline(spark.createDataFrame(rows, PGCDC_SCHEMA), PipelineConfig())
+    got = sorted(out.collect(), key=lambda r: r["wal_start"])
+
+    metrics = out._jdf.queryExecution().observedMetrics()
+    assert metrics.size() == 1
+    assert metrics.head()._2().getAs("invalid_msgs") == 1
+    assert [r["wal_start"] for r in got] == [1000, 1008, 1024, 1032]
+    assert [r["table"] for r in got] == [None, "public.t", '"Odd Table"', None]
+    assert {(r["transaction"], r["time_based_key"]) for r in got} == {("42", tbk)}
