@@ -11,7 +11,7 @@ message stream (the reference's ``client.go:487-545``).
   a synthetic ``COMMIT <xid>`` and ends the fold; the reader then skips
   ahead (client.go:386-424).
 
-``pgcdc.py`` (simple and parallel readers, both transports),
+``pgcdc.py`` (live and parallel readers, both transports),
 ``pgcdc_multi.py`` and the protocol loop in ``protocol.py`` call these
 helpers. Messages are ``(lsn, time_ms, line[, k])`` tuples, where ``k``
 is the message's index within its equal-LSN run (``run_head_k``).
@@ -98,11 +98,6 @@ def enclosing_txn(msgs, i: int):
         if xid is not None:
             return j, xid, tbk
     return -1, None, None
-
-
-def tuples(rows: list, stream_id: int = 0) -> list[tuple]:
-    """``fold`` rows as ``PGCDC_SCHEMA`` tuples."""
-    return [(w, w + 8, t, stream_id, line, x, k) for w, t, line, x, k in rows]
 
 
 def arrow_batch(rows: list, stream_id: int = 0):

@@ -2,23 +2,30 @@
 logical-decoding CDC (the Spark-native replacement for the reference's
 replication client, ``replication/client/client.go``).
 
-Architecture (SURVEY.md §7 M3): a CDC stream is one inherently
-sequential connection, so the reader is a
-``SimpleDataSourceStreamReader`` — reads happen on the driver, exactly
-like the reference's single replication goroutine; Spark's checkpoint
-offset/commit log supplies the progress-ledger semantics (X12):
+Architecture (SURVEY.md §7 M3): both readers are plain
+``DataSourceStreamReader``s over one offset planner (``_PgCdcReader``);
+Spark's checkpoint offset/commit log supplies the progress-ledger
+semantics (X12):
 
   * offset = ``{"lsn": N, "xid": ..., "tbk": ...}`` — the WAL position
     PLUS the in-flight transaction-assembly state (W3), so a restart
     resumes mid-transaction byte-identically;
+  * ``latestOffset`` fetches the next admission-capped batch on the
+    driver-side source process — for a live slot that process holds
+    the ONE replication connection, exactly like the reference's single
+    replication goroutine; executors never open the slot;
   * ``commit(offset)`` fires after a micro-batch is durably written —
     the transport acks the LSN upstream (StandbyStatusUpdate, W1),
     which is the contiguous-prefix guarantee the reference builds its
     ledger for: Spark only commits batch N after batch N's sinks
     succeeded and batches < N committed;
-  * re-delivery after an uncommitted crash replays from the last
-    committed offset — at-least-once (W5), duplicates carry the same
-    ``time_based_key`` for downstream idempotence (W4).
+  * re-delivery after an uncommitted crash replays the logged range
+    from its start offset — at-least-once (W5), duplicates carry the
+    same ``time_based_key`` for downstream idempotence (W4).
+
+``PgCdcParallelReader`` (replay, ``wal_dir``) plans corpus spans that
+executors parse; ``PgCdcLiveReader`` (``dsn``) hands executors the
+rows it fetched while planning.
 
 Transaction assembly (BEGIN adopts the xid, the ``time_based_key``,
 the synthetic COMMIT at an error marker) and the equal-LSN run index
@@ -43,14 +50,8 @@ import json
 import os
 from dataclasses import dataclass
 from itertools import islice
-from typing import Iterator, Tuple
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
 from . import assembly
@@ -207,6 +208,9 @@ class ReplayTransport:
         if not parts:
             return 0, None
         return int(parts[0]), (int(parts[1]) if len(parts) > 1 else None)
+
+    def close(self) -> None:
+        """Nothing to release: the corpus is local files."""
 
 
 class LiveTransport:
@@ -622,8 +626,9 @@ class LiveTransport:
         return self._acked
 
     def close(self) -> None:
-        if self._conn is not None:
-            self._conn.close()
+        """Release the slot; a later fetch reconnects from its own
+        ``after_lsn`` (or the acked LSN, whichever is further)."""
+        self._disconnect()
 
     # ---------------------------------------------------- slot DDL (CLI)
     @staticmethod
@@ -636,10 +641,7 @@ class LiveTransport:
         """CREATE_REPLICATION_SLOT <slot> LOGICAL <plugin> over the
         wire (idempotent on SQLSTATE 42710) — utils/utils.go:38-56; the
         reference hardcodes test_decoding (utils.go:50), this engine
-        also creates pgoutput slots. The retry/idempotency policy layer
-        lives in sources/slots.py; a psycopg-based adapter
-        (``slots.psycopg_factory``) remains for deployments that
-        prefer a driver-managed connection."""
+        also creates pgoutput slots."""
         from .pgwire import WireConnection, parse_dsn
 
         conn = WireConnection(**parse_dsn(dsn)).connect()
@@ -731,14 +733,83 @@ class _Offset:
         return msgs, end
 
 
-class PgCdcSimpleReader(SimpleDataSourceStreamReader):
+class _PgCdcReader(DataSourceStreamReader):
+    """The offset planner both single-slot readers share. It runs in
+    Spark's driver-side source process: ``latestOffset`` advances one
+    admission-capped batch from the last planned or replayed end (or,
+    before either, from ``_resume_state``); ``partitions`` anchors that
+    advance at the range Spark plans — a restarted query replays its
+    logged batch, or ``(last_end, last_end)``, before its first
+    ``latestOffset`` — and delegates the chunking to ``_chunks``;
+    ``commit`` acks the range end upstream (X12/W1)."""
+
+    def __init__(self, options: dict, transport):
+        self.transport = transport
+        # backpressure bound — reference client buffer (main.go:647-652)
+        self.max_msgs = PgCdcDataSource.admission_cap(options)
+        self.msgs_per_partition = int(options.get("msgs_per_partition", "20000"))
+        self._last: _Offset | None = None  # end offset of the last planned batch
+
+    def initialOffset(self) -> dict:
+        return _Offset().to_dict()
+
+    def _resume_state(self) -> _Offset:
+        """Offset to advance FROM when this reader has planned no batch
+        yet and Spark replayed none: a fresh query starts at the
+        initial offset."""
+        return _Offset()
+
+    def _advance(self, start: _Offset) -> _Offset:
+        return start.next_batch(self.transport, self.max_msgs)[1]
+
+    def latestOffset(self) -> dict:
+        start = self._last if self._last is not None else self._resume_state()
+        self._last = self._advance(start)
+        return self._last.to_dict()
+
+    def partitions(self, start: dict, end: dict):
+        s, e = _Offset.from_dict(start), _Offset.from_dict(end)
+        self._last = e  # replay of a logged batch also anchors advance
+        return self._chunks(s, e)
+
+    def commit(self, end: dict) -> None:
+        """Micro-batch durably committed → ack the contiguous prefix
+        upstream (StandbyStatusUpdate, W1/X12). The sub-LSN seq rides
+        along: a replay resume via ``acked_pos`` must not skip the
+        tail of an equal-LSN run when the batch cap cut inside one
+        (ADVICE r9); the live transport accepts and ignores it — the
+        wire ack is LSN-granular by protocol."""
+        off = _Offset.from_dict(end)
+        self.transport.ack(off.lsn, off.seq)
+
+
+@dataclass
+class _RowChunk(InputPartition):
+    """Assembled rows the driver fetched, as one ``PGCDC_SCHEMA`` Arrow
+    batch: an executor reads the partition, never the slot."""
+
+    batch: object
+
+
+class PgCdcLiveReader(_PgCdcReader):
+    """Single-connection reader: a live slot (``dsn``), or a replay
+    directory (``wal_dir``) driven the same way.
+
+    ``latestOffset`` fetches and assembles the batch and keeps its rows;
+    ``partitions`` hands them to executors in ``msgs_per_partition``-row
+    chunks. A range that is not the kept batch — a logged, uncommitted
+    batch replanned after a restart — is fetched again from its start
+    and cut at its end with ``_Offset.consumed`` (deterministic replay,
+    X13); the connection is then dropped, because it has read past the
+    range end and the next fetch must restart there."""
+
     def __init__(self, options: dict):
         wal_dir = options.get("wal_dir")
         if not wal_dir:
             dsn, slot = options.get("dsn"), options.get("slot", "pg_bifrost_spark")
             if not dsn:
                 raise ValueError("pgcdc requires option wal_dir=<replay dir> or dsn=<postgres dsn>")
-            self.transport = LiveTransport(
+            transport = LiveTransport(
                 dsn,
                 slot,
                 plugin=options.get("plugin", "test_decoding"),
@@ -751,43 +822,37 @@ class PgCdcSimpleReader(SimpleDataSourceStreamReader):
                 in ("on", "true", "1"),
             )
         else:
-            self.transport = ReplayTransport(wal_dir)
-        # backpressure bound — reference client buffer (main.go:647-652)
-        self.max_msgs = PgCdcDataSource.admission_cap(options)
+            transport = ReplayTransport(wal_dir)
+        super().__init__(options, transport)
+        self._kept: tuple | None = None  # (start, end, rows) of the planned batch
 
-    def initialOffset(self) -> dict:
-        return _Offset().to_dict()
-
-    def _read_batch(self, start: dict):
-        """One admission-capped batch from ``start``: (rows, msgs, end),
-        where ``rows[i]`` is ``msgs[i]`` assembled (an error marker's
-        row is its synthetic COMMIT)."""
+    def _advance(self, start: _Offset) -> _Offset:
         rows: list = []
-        off = _Offset.from_dict(start)
-        msgs, end = off.next_batch(self.transport, self.max_msgs, rows)
-        return assembly.tuples(rows), msgs, end
+        _msgs, end = start.next_batch(self.transport, self.max_msgs, rows)
+        self._kept = (start, end, rows)
+        return end
 
-    def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
-        rows, _msgs, end = self._read_batch(start)
-        return iter(rows), end.to_dict()
+    def _chunks(self, s: _Offset, e: _Offset) -> list:
+        if self._kept is not None and self._kept[:2] == (s, e):
+            rows = self._kept[2]
+        elif (s.lsn, s.seq) == (e.lsn, e.seq):
+            rows = []  # nothing in range: leave the transport alone
+        else:
+            rows = []
+            msgs, _ = s.next_batch(self.transport, self.max_msgs, rows)
+            rows = [r for r, m in zip(rows, msgs) if e.consumed(m[0], m[3])]
+            self.transport.close()
+        n = self.msgs_per_partition
+        return [
+            _RowChunk(assembly.arrow_batch(rows[i : i + n]))
+            for i in range(0, max(len(rows), 1), n)
+        ]
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        """Deterministic replay of a checkpointed range (exactly the
-        reference's resume-at-LSN, X13)."""
-        rows, msgs, _ = self._read_batch(start)
-        e = _Offset.from_dict(end)
-        return iter([r for r, m in zip(rows, msgs) if e.consumed(m[0], m[3])])
+    def read(self, partition: _RowChunk):
+        yield partition.batch
 
-    def commit(self, end: dict) -> None:
-        """Micro-batch durably committed → ack the contiguous prefix
-        upstream (StandbyStatusUpdate, W1/X12). The sub-LSN seq rides
-        along: a replay resume via ``acked_pos`` must not skip the
-        tail of an equal-LSN run when the batch cap cut inside one
-        (same data-loss class the parallel reader's commit fixed,
-        ADVICE r9); the live transport accepts and ignores it — the
-        wire ack is LSN-granular by protocol."""
-        off = _Offset.from_dict(end)
-        self.transport.ack(off.lsn, off.seq)
+    def stop(self) -> None:
+        self.transport.close()
 
 
 # ---------------------------------------------------------------------------
@@ -850,7 +915,7 @@ def _read_span_msgs(wal_dir: str, spans: list):
     return out
 
 
-class PgCdcParallelReader(DataSourceStreamReader):
+class PgCdcParallelReader(_PgCdcReader):
     """Replay-transport reader with executor-parallel Arrow reads.
 
     The driver does exactly what the reference's replication goroutine
@@ -860,42 +925,32 @@ class PgCdcParallelReader(DataSourceStreamReader):
     movement is per-partition on executors: each task parses its LSN
     slice of the corpus and yields one Arrow RecordBatch, so the
     Python→JVM hop is a columnar buffer, not 600 k pickled tuples.
-    Offset dicts are byte-compatible with ``PgCdcSimpleReader``
-    (``{"lsn", "xid", "tbk", "seq", "trunc"}`` — the sub-LSN resume
-    position and the truncated-fetch count, ADVICE r9) — checkpoints
-    carry the in-flight transaction state (W3) either way.
+    Offsets are the live reader's (``{"lsn", "xid", "tbk", "seq",
+    "trunc"}`` — the sub-LSN resume position and the truncated-fetch
+    count, ADVICE r9), so checkpoints carry the in-flight transaction
+    state (W3) either way.
 
     Scale posture: a 1000-executor cluster reads a WAL replay corpus
     at aggregate disk bandwidth; per-batch admission is still bounded
     (max_msgs_per_batch), and commit() acks the contiguous prefix
-    upstream exactly like the simple reader (X12/W1)."""
+    upstream (X12/W1)."""
 
     def __init__(self, options: dict):
         self.wal_dir = options["wal_dir"]
-        self.transport = ReplayTransport(self.wal_dir)
-        self.max_msgs = PgCdcDataSource.admission_cap(options)
-        self.msgs_per_partition = int(options.get("msgs_per_partition", "20000"))
-        self._last: _Offset | None = None  # end offset of the last planned batch
+        super().__init__(options, ReplayTransport(self.wal_dir))
 
     # -- driver-side offset planning ------------------------------------
-    def initialOffset(self) -> dict:
-        return _Offset().to_dict()
-
     def _resume_state(self) -> _Offset:
-        """Offset to advance FROM when this reader object has planned
-        no batch yet (fresh query or restart): the acked position is the
-        last durably committed batch end (commit() wrote it). The
-        in-flight txn state there comes from ``assembly.enclosing_txn``
-        — O(txn) work, once per query start."""
+        """The acked position is the last durably committed batch end
+        (commit() wrote it, with its sub-LSN seq — an LSN-only ack
+        would skip the equal-LSN run tail after a mid-run batch
+        boundary, ADVICE r9). The in-flight txn state there comes from
+        ``assembly.enclosing_txn`` — O(txn) work, once per query
+        start."""
         lsn, seq = self.transport.acked_pos()
         msgs = self.transport._load()
         _, xid, tbk = assembly.enclosing_txn(msgs, self.transport.index(lsn, seq))
         return _Offset(lsn=lsn, xid=xid, tbk=tbk, seq=seq)
-
-    def latestOffset(self) -> dict:
-        start = self._last if self._last is not None else self._resume_state()
-        _msgs, self._last = start.next_batch(self.transport, self.max_msgs)
-        return self._last.to_dict()
 
     def _spans(self, a: int, b: int) -> list:
         """Compress sorted-corpus indices [a, b) into (file, line_lo,
@@ -914,15 +969,13 @@ class PgCdcParallelReader(DataSourceStreamReader):
                 spans.append([name, line, line + 1])
         return [tuple(s) for s in spans]
 
-    def partitions(self, start: dict, end: dict):
-        """Chunks of the corpus slice for offset range (start, end],
-        each with the txn state at its first message. An error marker
-        ends the slice just past itself (skip-ahead leaves a documented
+    def _chunks(self, s: _Offset, e: _Offset) -> list:
+        """Chunks of the corpus slice for offset range (s, e], each
+        with the txn state at its first message. An error marker ends
+        the slice just past itself (skip-ahead leaves a documented
         gap)."""
-        s, e = _Offset.from_dict(start), _Offset.from_dict(end)
         msgs = self.transport._load()
         a, i1 = self.transport.index(s.lsn, s.seq), self.transport.index(e.lsn, e.seq)
-        self._last = e  # replay of a logged batch also anchors advance
         chunks: list[_WalChunk] = []
         xid, tbk = s.xid, s.tbk
         while a < i1:
@@ -940,14 +993,6 @@ class PgCdcParallelReader(DataSourceStreamReader):
         msgs = _read_span_msgs(partition.wal_dir, partition.spans)
         assembly.fold(msgs, partition.base_xid, partition.base_tbk, rows)
         yield assembly.arrow_batch(rows)
-
-    def commit(self, end: dict) -> None:
-        off = _Offset.from_dict(end)
-        # ack the sub-LSN position too: this reader's restart resume
-        # goes through the ack record (_resume_state), so an LSN-only
-        # ack would skip the equal-LSN run tail after a mid-run batch
-        # boundary (ADVICE r9)
-        self.transport.ack(off.lsn, off.seq)
 
 
 class PgCdcDataSource(DataSource):
@@ -976,26 +1021,14 @@ class PgCdcDataSource(DataSource):
     def schema(self) -> StructType:
         return PGCDC_SCHEMA
 
-    def simpleStreamReader(self, schema: StructType) -> PgCdcSimpleReader:
-        return PgCdcSimpleReader(self.options)
-
-    def streamReader(self, schema: StructType) -> "PgCdcParallelReader":
-        """Partition-parallel reader for the replay transport: the
-        driver plans LSN ranges, EXECUTORS parse WAL lines and emit
-        Arrow batches — no driver-side row materialization, no
-        per-row Python→JVM conversion (measured ~5× on the sf0.1
-        replay corpus vs the simple reader). A live-DSN source stays
-        on the simple reader (one replication connection is inherently
-        sequential): raising here makes Spark fall back to
-        ``simpleStreamReader``."""
-        if not self.options.get("wal_dir"):
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (live DSN)"},
-            )
-        return PgCdcParallelReader(self.options)
+    def streamReader(self, schema: StructType) -> _PgCdcReader:
+        """The partition-parallel replay reader for ``wal_dir`` (the
+        driver plans LSN ranges, EXECUTORS parse WAL lines into Arrow
+        batches), the live reader for ``dsn`` (one replication
+        connection, held by the driver-side source process)."""
+        if self.options.get("wal_dir"):
+            return PgCdcParallelReader(self.options)
+        return PgCdcLiveReader(self.options)
 
 
 def register(spark) -> None:

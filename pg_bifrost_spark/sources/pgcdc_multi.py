@@ -1,8 +1,8 @@
 """``pgcdc-multi`` — partitioned streaming source for MULTIPLE
 replication slots: each slot is an independent, internally-ordered CDC
 stream, and each micro-batch reads every slot's new range as its own
-input partition ON AN EXECUTOR (a full ``DataSourceStreamReader``, not
-the driver-side simple reader).
+input partition ON AN EXECUTOR (executors read the slots' WAL files
+themselves; the single-slot live reader hands them rows it fetched).
 
 This is the scale-out story for ingestion: one slot == one sequential
 connection (the reference's model), N slots == N parallel partitions

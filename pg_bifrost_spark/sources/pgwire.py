@@ -57,19 +57,16 @@ MAX_FRAME_LEN = 64 * 1024 * 1024
 
 
 def _validate_slot_name(slot: str) -> str:
-    """Replication-slot charset guard at the wire-client entry points.
+    """Replication-slot charset guard at the wire-client entry points:
+    the charset Postgres itself allows for slot names, lowercased.
     Slot names are interpolated into replication-command text AND — on
     the 42710 already-exists path — into a quoted SQL literal for the
-    catalog probe; a name carrying a quote or whitespace would break
-    or inject that query (ADVICE r11). Delegates to the ONE shared
-    validator (slots._validate_slot) so the two admin surfaces cannot
-    drift, wrapping its ValueError in the wire error type."""
-    from .slots import _validate_slot
-
-    try:
-        return _validate_slot(slot)
-    except ValueError as exc:
-        raise WireError(str(exc)) from None
+    catalog probe (no bind parameters on a walsender connection); a
+    name carrying a quote or whitespace would break or inject that
+    query (ADVICE r11)."""
+    if not slot or not all(c.isalnum() and c.isascii() or c == "_" for c in slot):
+        raise WireError(f"invalid replication slot name: {slot!r}")
+    return slot.lower()
 
 
 def lsn_to_int(text: str) -> int:

@@ -1,11 +1,13 @@
-"""Test-support data source: a replay transport that TRUNCATES its
-first fetch, for pinning the drain loop's cross-process truncation
-channel (ADVICE r9).
+"""Test support for the ``pgcdc`` readers.
 
-The real bug class this guards: ``LiveTransport.fetch`` runs inside
-PySpark's Python data-source worker process
-(``python_streaming_source_runner``), NOT the user's driver process —
-so a module-level counter bumped there is invisible to
+``read_batch`` drives a reader through one micro-batch in-process, in
+the order Spark's source runner and executors call it.
+
+``TruncatingReplaySource`` pins the drain loop's cross-process
+truncation channel (ADVICE r9). The real bug class it guards:
+``LiveTransport.fetch`` runs inside PySpark's Python data-source worker
+process (``python_streaming_source_runner``), NOT the user's driver
+process — so a module-level counter bumped there is invisible to
 ``drain_cdc_query``. The only signal channel that crosses that
 boundary is the OFFSET dict (``_Offset.trunc``), which Spark surfaces
 back to the driver through the progress log. This source truncates
@@ -21,7 +23,21 @@ from __future__ import annotations
 
 import os
 
-from .pgcdc import PgCdcDataSource, PgCdcSimpleReader, ReplayTransport
+from .pgcdc import PgCdcDataSource, PgCdcLiveReader, ReplayTransport
+
+
+def read_batch(reader, start: dict) -> tuple[list[tuple], dict]:
+    """Plan and read the batch after ``start`` as a restarted query
+    would: ``partitions(start, start)`` anchors the reader, then
+    ``latestOffset`` → ``partitions`` → ``read``. Returns the
+    ``PGCDC_SCHEMA`` rows as tuples, and the end offset."""
+    reader.partitions(start, start)
+    end = reader.latestOffset()
+    rows: list[tuple] = []
+    for part in reader.partitions(start, end):
+        for batch in reader.read(part):
+            rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
+    return rows, end
 
 
 class TruncatingReplayTransport(ReplayTransport):
@@ -51,22 +67,14 @@ class TruncatingReplayTransport(ReplayTransport):
 
 class TruncatingReplaySource(PgCdcDataSource):
     """``format("pgcdc_trunc")`` — the pgcdc source wired to the
-    truncating transport, forced onto the simple reader (the parallel
-    reader plans offsets from the corpus, not from fetch)."""
+    truncating transport through the live reader (the parallel reader
+    plans offsets from the corpus, not from fetch)."""
 
     @classmethod
     def name(cls) -> str:
         return "pgcdc_trunc"
 
-    def simpleStreamReader(self, schema):
-        reader = PgCdcSimpleReader(self.options)
+    def streamReader(self, schema):
+        reader = PgCdcLiveReader(self.options)
         reader.transport = TruncatingReplayTransport(self.options["wal_dir"])
         return reader
-
-    def streamReader(self, schema):
-        from pyspark.errors import PySparkNotImplementedError
-
-        raise PySparkNotImplementedError(
-            errorClass="NOT_IMPLEMENTED",
-            messageParameters={"feature": "streamReader (truncation twin)"},
-        )

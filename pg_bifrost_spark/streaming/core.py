@@ -113,7 +113,8 @@ def drain_cdc_query(
     pinned by ``tests/test_streaming.py::
     test_drain_recovers_uncommitted_batch``: a failed sink leaves
     offsets/N without commits/N, and the next drain re-runs that batch
-    (readBetweenOffsets determinism) then keeps draining.
+    (the reader replans the logged range deterministically) then keeps
+    draining.
 
     FETCH-LIMIT CONTRACT (ADVICE r5, runtime-enforced since r7): the
     under-cap early exit assumes the source admits exactly

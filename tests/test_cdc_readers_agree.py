@@ -2,7 +2,7 @@
 (``sources/assembly.py``), so on one well-formed corpus they must emit
 the same ``(wal_start, line, txn_id, time_based_key)`` sequence:
 
-* ``PgCdcSimpleReader`` drained at random admission caps;
+* ``PgCdcLiveReader`` (over replay) drained at random admission caps;
 * ``PgCdcParallelReader`` drained at random caps and partition sizes,
   with a fresh reader per batch (the restart path through the ack
   record, as ``drain_cdc_query`` runs it);
@@ -21,8 +21,9 @@ import json
 import os
 import random
 
-from pg_bifrost_spark.sources.pgcdc import PgCdcParallelReader, PgCdcSimpleReader
+from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader, PgCdcParallelReader
 from pg_bifrost_spark.sources.pgcdc_multi import PgCdcMultiStreamReader
+from pg_bifrost_spark.sources.testing import read_batch
 
 SLOT = "slot_a"
 
@@ -60,10 +61,10 @@ MAX_BATCHES = 500  # a drain that does not end is a failure, not a hang
 
 
 def _drain_simple(wal_dir: str, cap: int) -> list[list[tuple]]:
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": str(cap)})
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": str(cap)})
     batches, off = [], reader.initialOffset()
     for _ in range(MAX_BATCHES):
-        rows, off = reader.read(off)
+        rows, off = read_batch(reader, off)
         rows = [_key(r) for r in rows]
         if not rows:
             return batches

@@ -8,7 +8,8 @@ import json
 import os
 
 from pg_bifrost_spark.cdc.fixtures import dml_line, ops_to_raw_lines, txn
-from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader
+from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader
+from pg_bifrost_spark.sources.testing import read_batch
 
 
 def test_error_recovery_synthetic_commit_and_gap(tmp_path):
@@ -28,8 +29,8 @@ def test_error_recovery_synthetic_commit_and_gap(tmp_path):
             if i == 1:  # inject the error response after the first INSERT
                 f.write(json.dumps({"wal_start": ws + 4, "error": "decode failure"}) + "\n")
 
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir})
-    batch1, off1 = reader.read(reader.initialOffset())
+    reader = PgCdcLiveReader({"wal_dir": wal_dir})
+    batch1, off1 = read_batch(reader, reader.initialOffset())
     batch1 = list(batch1)
     # BEGIN, INSERT, then the synthetic COMMIT closing txn 50
     assert [r[4].split()[0] for r in batch1] == ["BEGIN", "table", "COMMIT"]
@@ -42,6 +43,6 @@ def test_error_recovery_synthetic_commit_and_gap(tmp_path):
     with open(os.path.join(wal_dir, "1.jsonl"), "w") as f:
         for ws, _, tm, _, line in ops_to_raw_lines(more, start_lsn=500_000):
             f.write(json.dumps({"wal_start": ws, "server_time_ms": tm, "line": line}) + "\n")
-    batch2, off2 = reader.read(off1)
+    batch2, off2 = read_batch(reader, off1)
     batch2 = list(batch2)
     assert [r[5] for r in batch2] == ["52", "52", "52"]

@@ -8,7 +8,8 @@ from __future__ import annotations
 import json
 import os
 
-from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader, ReplayTransport
+from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader, ReplayTransport
+from pg_bifrost_spark.sources.testing import read_batch
 
 
 def test_one_txn_spans_many_batches(tmp_path):
@@ -31,11 +32,11 @@ def test_one_txn_spans_many_batches(tmp_path):
         lsn += 8
         f.write(json.dumps({"wal_start": lsn, "line": "COMMIT 777"}) + "\n")
 
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1000"})
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1000"})
     off = reader.initialOffset()
     batches, total = 0, []
     while True:
-        rows, off = reader.read(off)
+        rows, off = read_batch(reader, off)
         rows = list(rows)
         if not rows:
             break

@@ -1,5 +1,5 @@
 """The partition-parallel replay reader must be row-identical to the
-sequential simple reader on the same corpus — same txn stamping, same
+sequential live reader (driven over replay) on the same corpus — same txn stamping, same
 error skip-ahead, same offsets — while reading spans on executors.
 
 Reference behaviors mirrored: transaction assembly (client.go:487-545),
@@ -15,11 +15,12 @@ import pyarrow as pa
 import pytest
 
 from pg_bifrost_spark.sources.pgcdc import (
+    PgCdcLiveReader,
     PgCdcParallelReader,
-    PgCdcSimpleReader,
     _Offset,
     _read_span_msgs,
 )
+from pg_bifrost_spark.sources.testing import read_batch
 
 
 def _write(path: str, msgs: list[dict]) -> None:
@@ -85,10 +86,10 @@ def _drain_parallel(wal_dir: str, max_msgs: int, msgs_per_partition: int = 3):
 
 
 def _drain_simple(wal_dir: str, max_msgs: int):
-    r = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": str(max_msgs)})
+    r = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": str(max_msgs)})
     rows, start = [], r.initialOffset()
     for _ in range(100):
-        out, end = r.read(start)
+        out, end = read_batch(r, start)
         out = list(out)
         if not out:
             break

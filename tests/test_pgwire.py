@@ -58,7 +58,14 @@ class FakeWalsender:
     exchange; ``frames`` is the CopyBoth script (each item either
     ("xlog", lsn, line), ("keepalive", lsn, reply), ("error", msg), or
     ("expect_status", lsn) — the server BLOCKS reading a standby
-    status update and asserts its three LSN fields)."""
+    status update and asserts its three LSN fields). A
+    ``frames_per_conn`` item may be a callable of the requested start
+    LSN that returns the script.
+
+    ``concurrent=True`` serves each connection on its own thread, and,
+    as Postgres does, rejects a START_REPLICATION on a slot another
+    open connection is streaming with SQLSTATE 55006 (recorded in
+    ``rejected_starts``)."""
 
     def __init__(
         self,
@@ -70,13 +77,16 @@ class FakeWalsender:
         keyfile: str | None = None,
         frames_per_conn=None,  # list of scripts, one per START_REPLICATION
         fail_start=None,  # SQLSTATEs to reject START_REPLICATION with, one per attempt
+        concurrent: bool = False,
     ):
         self.auth = auth
         self.tls = tls
         self.certfile, self.keyfile = certfile, keyfile
         self.frames = list(frames or [])
         self.frames_per_conn = (
-            [list(s) for s in frames_per_conn] if frames_per_conn is not None else None
+            [s if callable(s) else list(s) for s in frames_per_conn]
+            if frames_per_conn is not None
+            else None
         )
         self.fail_start = list(fail_start or [])
         self.xlogpos = xlogpos
@@ -89,6 +99,10 @@ class FakeWalsender:
         self.created_slots: list[str] = []
         self.slot_plugins: dict[str, str] = {}  # slot -> plugin it was created with
         self.slot_two_phase: dict[str, bool] = {}  # slot -> TWO_PHASE flag
+        self.concurrent = concurrent
+        self.rejected_starts: list[str] = []  # slots refused as active
+        self._streaming: set[str] = set()  # slots an open connection streams
+        self._lock = threading.Lock()
         self._srv = socket.socket()
         self._srv.bind(("127.0.0.1", 0))
         self._srv.listen(4)
@@ -228,15 +242,23 @@ class FakeWalsender:
         try:
             while True:
                 raw, _ = self._srv.accept()
-                conn = self._Conn(raw)
-                try:
-                    self._handle(conn)
-                except (ConnectionError, OSError):
-                    pass
-                finally:
-                    conn.close()
+                if self.concurrent:
+                    threading.Thread(
+                        target=self._serve_conn, args=(raw,), daemon=True
+                    ).start()
+                else:
+                    self._serve_conn(raw)
         except OSError:
             pass  # listener closed
+
+    def _serve_conn(self, raw):
+        conn = self._Conn(raw)
+        try:
+            self._handle(conn)
+        except (ConnectionError, OSError):
+            pass
+        finally:
+            conn.close()
 
     def _handle(self, conn):
         params = self._read_startup(conn)
@@ -322,23 +344,48 @@ class FakeWalsender:
                     )
                     self._rfq(conn)
                     continue  # client will close and retry on a new conn
-                self.start_commands.append(sql)
-                # token 4 is the LSN: `START_REPLICATION SLOT <slot>
-                # LOGICAL <lsn> [(options...)]` — [-1] would grab the
-                # options clause when one is present (pgoutput)
-                self.start_lsns.append(lsn_to_int(sql.split()[4]))
-                conn.sendall(_msg(b"W", struct.pack(">BH", 0, 0)))
-                if self.frames_per_conn is not None:
-                    script = (
-                        self.frames_per_conn.pop(0) if self.frames_per_conn else []
+                slot = sql.split()[2]
+                with self._lock:
+                    active = self.concurrent and slot in self._streaming
+                    if active:
+                        self.rejected_starts.append(slot)
+                    else:
+                        self._streaming.add(slot)
+                if active:
+                    conn.sendall(
+                        _msg(
+                            b"E",
+                            b"SERROR\x00C55006\x00Mreplication slot \""
+                            + slot.encode()
+                            + b"\" is active for PID 7\x00\x00",
+                        )
                     )
-                else:
-                    script = self.frames
-                self._run_copy_script(conn, script)
+                    self._rfq(conn)
+                    continue
+                try:
+                    self._stream(conn, sql)
+                finally:
+                    with self._lock:
+                        self._streaming.discard(slot)
                 return
             else:
                 self.failures.append(f"unexpected sql {sql!r}")
                 return
+
+    def _stream(self, conn, sql):
+        self.start_commands.append(sql)
+        # token 4 is the LSN: `START_REPLICATION SLOT <slot>
+        # LOGICAL <lsn> [(options...)]` — [-1] would grab the
+        # options clause when one is present (pgoutput)
+        start_lsn = lsn_to_int(sql.split()[4])
+        self.start_lsns.append(start_lsn)
+        conn.sendall(_msg(b"W", struct.pack(">BH", 0, 0)))
+        if self.frames_per_conn is not None:
+            with self._lock:
+                script = self.frames_per_conn.pop(0) if self.frames_per_conn else []
+        else:
+            script = self.frames
+        self._run_copy_script(conn, script(start_lsn) if callable(script) else script)
 
     def _run_copy_script(self, conn, script):
         for item in script:
@@ -471,13 +518,18 @@ def test_slot_name_charset_validated_before_any_wire_traffic():
     srv = FakeWalsender()
     try:
         c = _client(srv).connect()
-        for bad in ("s'; DROP TABLE x--", "s l o t", "", "s-dash", "s\x00"):
+        for bad in (
+            "s'; DROP TABLE x--", "s l o t", "", "s-dash", "s\x00",
+            "x; DROP TABLE", "a b", "s'lot", "s\xe9",
+        ):
             with pytest.raises(pgwire.WireError, match="invalid replication slot"):
                 c.create_slot(bad)
             with pytest.raises(pgwire.WireError, match="invalid replication slot"):
                 c.drop_slot(bad)
-        c.close()
         assert srv.created_slots == []  # nothing reached the server
+        assert c.create_slot("MySlot") is True
+        c.close()
+        assert srv.created_slots == ["myslot"]  # names are lowercased
     finally:
         srv.close()
 
@@ -1233,7 +1285,8 @@ def test_resume_at_commit_admits_next_txn_begin():
     transaction's BEGIN (stamped with the same X) is the first frame of
     the new connection's run. The resume position must still admit it:
     the reader, not the run index, decides what was consumed."""
-    from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader
+    from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader
+    from pg_bifrost_spark.sources.testing import read_batch
 
     scripts = [
         [
@@ -1254,14 +1307,14 @@ def test_resume_at_commit_admits_next_txn_begin():
         "max_msgs_per_batch": "3",
     }
     try:
-        r1 = PgCdcSimpleReader(opts)
-        rows, end = r1.read(r1.initialOffset())
+        r1 = PgCdcLiveReader(opts)
+        rows, end = read_batch(r1, r1.initialOffset())
         assert [r[4] for r in rows][-1] == "COMMIT 41"
         r1.commit(end)
         r1.transport.close()
 
-        r2 = PgCdcSimpleReader(opts)  # a new query: a new connection
-        rows, _ = r2.read(end)
+        r2 = PgCdcLiveReader(opts)  # a new query: a new connection
+        rows, _ = read_batch(r2, end)
         r2.transport.close()
         assert [(r[0], r[4].split(" ")[0], r[5]) for r in rows] == [
             (5000, "BEGIN", "42"),
@@ -1269,6 +1322,46 @@ def test_resume_at_commit_admits_next_txn_begin():
             (5008, "COMMIT", "42"),
         ]
         assert srv.start_lsns == [0, 5000]
+        assert srv.failures == [], srv.failures
+    finally:
+        srv.close()
+
+
+def test_idle_live_slot_drains_through_spark(spark, tmp_path):
+    """A drain that starts on an idle live slot must neither die nor
+    open a second connection to the slot: the driver-side source
+    process holds the one replication connection, executors read only
+    the rows it fetched, and the reader's stop() releases the slot for
+    the next query. The walsender refuses, as Postgres does, a
+    START_REPLICATION on a slot another connection is streaming."""
+    import json
+
+    from pg_bifrost_spark.streaming.core import drain_cdc_query
+
+    one_txn = [
+        ("xlog", 6000, "BEGIN 60"),
+        ("xlog", 6000, "table public.t: INSERT: id[integer]:1"),
+        ("xlog", 6008, "COMMIT 60"),
+    ]
+    srv = FakeWalsender(frames_per_conn=[[], one_txn], concurrent=True)
+    opts = {"dsn": f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}", "slot": "s_idle"}
+    ckpt = str(tmp_path / "ckpt")
+    seen: list[tuple] = []
+
+    def sink(df, epoch_id):
+        seen.extend(
+            (r.transaction, json.loads(r.json)["columns"]["id"]["new"]["v"])
+            for r in df.collect()
+            if r.json
+        )
+
+    try:
+        drain_cdc_query(spark, sink, ckpt, source_options=opts)  # idle: sends nothing
+        assert seen == []
+        drain_cdc_query(spark, sink, ckpt, source_options=opts)
+        assert seen == [("60", "1")]
+        assert srv.rejected_starts == []  # stop() released the first connection
+        assert srv.start_lsns == [0, 0]
         assert srv.failures == [], srv.failures
     finally:
         srv.close()

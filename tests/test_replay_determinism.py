@@ -1,4 +1,4 @@
-"""Failure-recovery determinism: readBetweenOffsets must reproduce a
+"""Failure-recovery determinism: replanning a logged range must reproduce a
 checkpointed batch byte-identically (the property Spark relies on when
 re-running an uncommitted batch after a crash), and the stdout sink's
 output format."""
@@ -9,7 +9,8 @@ import json
 import os
 
 from pg_bifrost_spark.cdc.fixtures import dml_line, ops_to_raw_lines, txn
-from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader
+from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader
+from pg_bifrost_spark.sources.testing import read_batch
 
 
 def test_read_between_offsets_replays_identically(tmp_path):
@@ -23,14 +24,19 @@ def test_read_between_offsets_replays_identically(tmp_path):
         for ws, _, tm, _, line in ops_to_raw_lines(ops):
             f.write(json.dumps({"wal_start": ws, "server_time_ms": tm, "line": line}) + "\n")
 
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "4"})
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "4"})
     start = reader.initialOffset()
-    rows1, end1 = reader.read(start)
+    rows1, end1 = read_batch(reader, start)
     rows1 = list(rows1)
 
     # crash-recovery path: a fresh reader instance replays the same range
-    reader2 = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "4"})
-    replay = list(reader2.readBetweenOffsets(start, end1))
+    reader2 = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "4"})
+    replay = [
+        r
+        for p in reader2.partitions(start, end1)
+        for b in reader2.read(p)
+        for r in zip(*[c.to_pylist() for c in b.columns])
+    ]
     assert replay == rows1
 
     # and subsequent ranges continue where the first left off: no
@@ -38,7 +44,7 @@ def test_read_between_offsets_replays_identically(tmp_path):
     seen = list(rows1)
     off = end1
     while True:
-        rows, off = reader.read(off)
+        rows, off = read_batch(reader, off)
         rows = list(rows)
         if not rows:
             break

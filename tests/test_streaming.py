@@ -10,7 +10,8 @@ import os
 
 from pg_bifrost_spark.cdc.fixtures import dml_line, ops_to_raw_lines, txn
 from pg_bifrost_spark.cdc.pipeline import PipelineConfig
-from pg_bifrost_spark.sources.pgcdc import PgCdcSimpleReader, ReplayTransport
+from pg_bifrost_spark.sources.pgcdc import PgCdcLiveReader, ReplayTransport
+from pg_bifrost_spark.sources.testing import read_batch
 from pg_bifrost_spark.streaming.core import start_cdc_query
 from pg_bifrost_spark.sinks.writers import kinesis_writer
 from pg_bifrost_spark.streaming.stats import aggregate_stats
@@ -105,10 +106,10 @@ def test_source_reader_carries_txn_state_across_batches(tmp_path):
             dml_line("public.t", "INSERT", [("id", "integer", 2)]),
         ),
     )
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "2"})
-    rows1, off1 = reader.read(reader.initialOffset())
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "2"})
+    rows1, off1 = read_batch(reader, reader.initialOffset())
     rows1 = list(rows1)
-    rows2, off2 = reader.read(off1)
+    rows2, off2 = read_batch(reader, off1)
     rows2 = list(rows2)
     assert [r[4].split()[0] for r in rows1] == ["BEGIN", "table"]
     assert [r[4].split()[0] for r in rows2] == ["table", "COMMIT"]
@@ -262,50 +263,105 @@ def test_drain_rejects_non_message_admission(spark, tmp_path):
         )
 
 
+UNCOMMITTED_OPS = [
+    op
+    for i in range(8)
+    for op in txn(300 + i, dml_line("public.t", "INSERT", [("id", "integer", i)]))
+]  # 24 messages
+
+
+def _drain_after_failed_batch(spark, ckpt, opts):
+    """Drain with a sink that fails its first batch, then drain again
+    from the same checkpoint. Returns the failed batch's ids and the
+    ids of every delivered batch."""
+    import pytest as _pytest
+
+    from pg_bifrost_spark.streaming.core import drain_cdc_query
+
+    failed: list[str] = []
+    batches: list[list[str]] = []
+    fail_once = {"armed": True}
+
+    def flaky_sink(df, epoch_id):
+        ids = [
+            json.loads(r.json)["columns"]["id"]["new"]["v"]
+            for r in df.collect()
+            if r.json
+        ]
+        if fail_once["armed"]:
+            fail_once["armed"] = False
+            failed.extend(ids)
+            raise RuntimeError("sink outage: batch must stay uncommitted")
+        batches.append(ids)
+
+    with _pytest.raises(Exception, match="sink outage"):
+        drain_cdc_query(spark, flaky_sink, ckpt, source_options=opts)
+    assert batches == []  # nothing delivered, offsets/0 written, commits/0 absent
+    assert os.path.exists(os.path.join(ckpt, "offsets", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    rounds = drain_cdc_query(spark, flaky_sink, ckpt, source_options=opts)
+    assert rounds >= 2  # the re-run batch, then the rest of the backlog
+    return failed, batches
+
+
 def test_drain_recovers_uncommitted_batch(spark, tmp_path):
     """Pin the AvailableNow-fallback edge (VERDICT r8 ask #6): the
     Python source falls back to single-batch runs, and Spark warns it
     "may not guarantee processing new data if there is an uncommitted
     batch". The drain path's contract: a run whose SINK fails leaves
     offsets/N without commits/N; the next drain from the same
-    checkpoint must re-run that exact batch (readBetweenOffsets
-    determinism) and then keep draining the backlog — no loss, the
-    failed batch re-delivered, nothing skipped."""
-    import pytest as _pytest
-
-    ops = []
-    for i in range(8):
-        ops.extend(
-            txn(300 + i, dml_line("public.t", "INSERT", [("id", "integer", i)]))
-        )
-    wal_dir = write_replay_dir(tmp_path, ops)  # 24 messages
-    ckpt = str(tmp_path / "ckpt")
+    checkpoint must re-run that exact batch (the reader replans the
+    logged range deterministically) and then keep draining the
+    backlog — no loss, the failed batch re-delivered, nothing
+    skipped."""
+    wal_dir = write_replay_dir(tmp_path, UNCOMMITTED_OPS)
     opts = {"wal_dir": wal_dir, "max_msgs_per_batch": "10"}
-
-    from pg_bifrost_spark.streaming.core import drain_cdc_query
-
-    seen: list[str] = []
-    fail_once = {"armed": True}
-
-    def flaky_sink(df, epoch_id):
-        rows = [r.json for r in df.collect() if r.json]
-        if fail_once["armed"]:
-            fail_once["armed"] = False
-            raise RuntimeError("sink outage: batch must stay uncommitted")
-        seen.extend(rows)
-
-    with _pytest.raises(Exception, match="sink outage"):
-        drain_cdc_query(spark, flaky_sink, ckpt, source_options=opts)
-    assert seen == []  # nothing delivered, offsets/0 written, commits/0 absent
-    assert os.path.exists(os.path.join(ckpt, "offsets", "0"))
-    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
-
-    rounds = drain_cdc_query(spark, flaky_sink, ckpt, source_options=opts)
-    assert rounds >= 2  # the re-run batch, then the rest of the backlog
-    got = sorted(
-        json.loads(j)["columns"]["id"]["new"]["v"] for j in seen
-    )
+    failed, batches = _drain_after_failed_batch(spark, str(tmp_path / "ckpt"), opts)
+    assert batches[0] == failed
+    got = sorted(i for b in batches for i in b)
     assert got == sorted(str(i) for i in range(8)), got
+
+
+def test_drain_recovers_uncommitted_live_batch(spark, tmp_path):
+    """The same contract on a live slot, against a walsender that
+    resends from the requested LSN. The next drain replans the logged
+    batch on the source process's own connection — fetched again from
+    its start offset, cut at its end — and then reconnects at the batch
+    end, so the frames the replan read past it are streamed again
+    instead of being lost."""
+    import sys
+
+    sys.path.insert(0, os.path.dirname(__file__))
+    from test_pgwire import DB, USER, FakeWalsender
+
+    from pg_bifrost_spark.sources.assembly import is_commit
+
+    frames = [("xlog", ws, line) for ws, _, _, _, line in ops_to_raw_lines(UNCOMMITTED_OPS)]
+
+    def resend_from(lsn):
+        # a walsender started at lsn resends that LSN's run, except a
+        # COMMIT that ended there
+        return [f for f in frames if f[1] > lsn or (f[1] == lsn and not is_commit(f[2]))]
+
+    srv = FakeWalsender(frames_per_conn=[resend_from] * 8, concurrent=True)
+    opts = {
+        "dsn": f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}",
+        "slot": "s_replan",
+        "max_msgs_per_batch": "10",
+    }
+    try:
+        failed, batches = _drain_after_failed_batch(spark, str(tmp_path / "ckpt"), opts)
+        assert batches[0] == failed  # exactly the logged batch
+        got = sorted(i for b in batches for i in b)
+        assert got == sorted(str(i) for i in range(8)), got
+        # drain 1, the replan from the initial offset, then the
+        # reconnect at the replanned batch's end (its 10th message)
+        assert srv.start_lsns[:3] == [0, 0, frames[9][1]], srv.start_lsns
+        assert srv.rejected_starts == []
+        assert srv.failures == [], srv.failures
+    finally:
+        srv.close()
 
 
 def test_drain_sees_truncation_across_process_boundary(spark, tmp_path):
@@ -360,18 +416,25 @@ def test_equal_lsn_batch_boundary_replay_reader(tmp_path):
         for lsn, line in lines:
             f.write(json.dumps({"wal_start": lsn, "server_time_ms": 1, "line": line}) + "\n")
 
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1"})
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1"})
     out, off = [], reader.initialOffset()
     for _ in range(3):
-        rows, off = reader.read(off)
+        rows, off = read_batch(reader, off)
         out.extend(rows)
     assert [r[4].split(" ")[0] for r in out] == ["BEGIN", "table", "COMMIT"]
     assert [r[0] for r in out] == [1000, 1000, 1008]
     # the mid-run offset addressed the boundary: (lsn=1000, seq=1)
     assert off["lsn"] == 1008
     # replay of a checkpointed mid-run range honors the sub-LSN bound
-    rows1, off1 = reader.read(reader.initialOffset())
-    replayed = list(reader.readBetweenOffsets(reader.initialOffset(), off1))
+    off1 = PgCdcLiveReader(
+        {"wal_dir": wal_dir, "max_msgs_per_batch": "1"}
+    ).latestOffset()
+    replayed = [
+        r
+        for p in reader.partitions(reader.initialOffset(), off1)
+        for b in reader.read(p)
+        for r in zip(*[c.to_pylist() for c in b.columns])
+    ]
     assert [r[4].split(" ")[0] for r in replayed] == ["BEGIN"]
 
 
@@ -414,8 +477,8 @@ def test_simple_reader_commit_acks_sub_lsn_seq(tmp_path):
         ]:
             f.write(json.dumps({"wal_start": lsn, "server_time_ms": 1, "line": line}) + "\n")
 
-    reader = PgCdcSimpleReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1"})
-    rows, off = reader.read(reader.initialOffset())
+    reader = PgCdcLiveReader({"wal_dir": wal_dir, "max_msgs_per_batch": "1"})
+    rows, off = read_batch(reader, reader.initialOffset())
     assert [r[4].split(" ")[0] for r in rows] == ["BEGIN"]
     reader.commit(off)  # batch boundary landed inside the lsn=1000 run
     assert reader.transport.acked_pos() == (1000, 1)
