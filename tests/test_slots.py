@@ -1,181 +1,44 @@
-"""Replication-slot DDL semantics (S4) against a scripted fake
-connection — reference behaviors from ``utils/utils.go:38-77``,
-``main/main.go:173-204``, ``replication/client/conn/conn.go:45-75``.
-No Spark session needed."""
+"""Replication-slot name rules at the slot-DDL entry points
+(``WireConnection.create_slot`` / ``drop_slot``): names are checked
+against the charset Postgres allows and lowercased before any command
+text is built. The connection's ``simple_query`` is replaced by a
+recorder, so no server or Spark session is needed."""
 
 from __future__ import annotations
 
 import pytest
 
-from pg_bifrost_spark.sources.slots import (
-    SQLSTATE_DUPLICATE_OBJECT,
-    SlotAdmin,
-    SlotDDLError,
-)
+from pg_bifrost_spark.sources.pgwire import WireConnection, WireError
 
 
-class FakeConn:
-    def __init__(self, log, fail_sql=None):
-        self.log = log
-        self.fail_sql = fail_sql or {}
-        self.closed = False
+def _recording_conn(log: list[str]) -> WireConnection:
+    conn = WireConnection(host="127.0.0.1", port=1, user="u", dbname="d")
 
-    def execute(self, sql: str):
-        self.log.append(sql)
-        for needle, err in self.fail_sql.items():
-            if needle in sql:
-                raise err
+    def simple_query(sql: str):
+        log.append(sql)
+        return []
 
-    def close(self):
-        self.closed = True
-        self.log.append("<close>")
+    conn.simple_query = simple_query
+    return conn
 
 
-def make_admin(log, fail_sql=None, connect_failures=0, **kw):
-    attempts = {"n": 0}
-    conns = []
-
-    def connect():
-        attempts["n"] += 1
-        if attempts["n"] <= connect_failures:
-            raise ConnectionError("refused")
-        c = FakeConn(log, fail_sql)
-        conns.append(c)
-        return c
-
-    t = {"now": 0.0}
-    sleeps = []
-
-    def sleep(s):
-        sleeps.append(s)
-        t["now"] += s
-
-    admin = SlotAdmin(connect, sleep=sleep, clock=lambda: t["now"], **kw)
-    return admin, conns, sleeps, attempts
-
-
-# ------------------------------------------------------------- create
-def test_create_issues_identify_then_create_and_closes():
-    log = []
-    admin, conns, _, _ = make_admin(log)
-    assert admin.create("my_slot") is True
-    assert log == [
-        "IDENTIFY_SYSTEM",
-        "CREATE_REPLICATION_SLOT my_slot LOGICAL test_decoding",
-        "<close>",
-    ]
-    assert conns[0].closed
-
-
-def test_create_is_idempotent_on_42710():
-    """main.go:178-182 — 'already exists' is success, not an error."""
-    log = []
-    admin, _, _, _ = make_admin(
-        log,
-        fail_sql={
-            "CREATE_REPLICATION_SLOT": SlotDDLError(
-                SQLSTATE_DUPLICATE_OBJECT, "slot already exists"
-            )
-        },
-    )
-    assert admin.create("my_slot") is False
-    assert log[-1] == "<close>"
-
-
-def test_create_other_sqlstate_propagates_and_still_closes():
-    log = []
-    admin, conns, _, _ = make_admin(
-        log, fail_sql={"CREATE_REPLICATION_SLOT": SlotDDLError("55000", "no wal_level")}
-    )
-    with pytest.raises(SlotDDLError) as ei:
-        admin.create("my_slot")
-    assert ei.value.sqlstate == "55000"
-    assert conns[0].closed
-
-
-def test_identify_system_failure_aborts_before_ddl():
-    """utils.go:45-48 — a non-replication connection fails fast."""
-    log = []
-    admin, _, _, _ = make_admin(
-        log, fail_sql={"IDENTIFY_SYSTEM": SlotDDLError("42601", "not a walsender")}
-    )
-    with pytest.raises(SlotDDLError):
-        admin.create("my_slot")
-    assert not any(s.startswith("CREATE") for s in log)
-
-
-def test_custom_plugin():
-    log = []
-    admin, _, _, _ = make_admin(log, plugin="wal2json")
-    admin.create("s")
-    assert "CREATE_REPLICATION_SLOT s LOGICAL wal2json" in log
-
-
-# --------------------------------------------------------------- drop
-def test_drop_uses_wait_and_closes():
-    """utils.go:71 — Wait: true blocks on a concurrent consumer."""
-    log = []
-    admin, conns, _, _ = make_admin(log)
-    admin.drop("my_slot")
-    assert log == ["IDENTIFY_SYSTEM", "DROP_REPLICATION_SLOT my_slot WAIT", "<close>"]
-    assert conns[0].closed
-
-
-def test_drop_missing_slot_propagates():
-    """The reference does NOT make drop idempotent (main.go:193-198)."""
-    log = []
-    admin, _, _, _ = make_admin(
-        log, fail_sql={"DROP_REPLICATION_SLOT": SlotDDLError("42704", "does not exist")}
-    )
-    with pytest.raises(SlotDDLError):
-        admin.drop("ghost")
-
-
-# -------------------------------------------------------------- retry
-def test_connect_retries_with_exponential_backoff():
-    """conn.go:45-75 — transient refusals retried, 0.5 s ×1.5."""
-    log = []
-    admin, _, sleeps, attempts = make_admin(log, connect_failures=3)
-    assert admin.create("s") is True
-    assert attempts["n"] == 4
-    assert sleeps == [0.5, 0.75, 1.125]
-
-
-def test_connect_gives_up_after_max_elapsed():
-    """conn.go:56 — MaxElapsedTime ~20 s, then the error surfaces."""
-    log = []
-    admin, _, sleeps, attempts = make_admin(log, connect_failures=10_000)
-    with pytest.raises(ConnectionError):
-        admin.create("s")
-    assert sum(sleeps) <= 20.0
-    assert attempts["n"] > 3
-
-
-def test_server_spoken_error_is_not_retried():
-    """A SQLSTATE error means the server answered — retrying the
-    connect loop would mask a real failure."""
-    calls = {"n": 0}
-
-    def connect():
-        calls["n"] += 1
-        raise SlotDDLError("28000", "authentication failed")
-
-    admin = SlotAdmin(connect, sleep=lambda s: None, clock=lambda: 0.0)
-    with pytest.raises(SlotDDLError):
-        admin.create("s")
-    assert calls["n"] == 1
-
-
-# --------------------------------------------------------- validation
 @pytest.mark.parametrize("bad", ["", "x; DROP TABLE", "a b", "s'lot", "sé"])
 def test_slot_name_validation(bad):
-    admin, *_ = make_admin([])
-    with pytest.raises(ValueError):
-        admin.create(bad)
+    log = []
+    conn = _recording_conn(log)
+    with pytest.raises(WireError, match="invalid replication slot"):
+        conn.create_slot(bad)
+    with pytest.raises(WireError, match="invalid replication slot"):
+        conn.drop_slot(bad)
+    assert log == []  # rejected before any command text is sent
 
 
 def test_slot_name_lowercased():
     log = []
-    admin, _, _, _ = make_admin(log)
-    admin.create("MySlot")
-    assert "CREATE_REPLICATION_SLOT myslot LOGICAL test_decoding" in log
+    conn = _recording_conn(log)
+    assert conn.create_slot("MySlot") is True
+    conn.drop_slot("MySlot")
+    assert log == [
+        "CREATE_REPLICATION_SLOT myslot LOGICAL test_decoding",
+        "DROP_REPLICATION_SLOT myslot WAIT",
+    ]
