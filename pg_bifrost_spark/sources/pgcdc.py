@@ -227,9 +227,11 @@ class LiveTransport:
 
     The fetch contract matches ReplayTransport: ``fetch(after_lsn,
     limit)`` drains ``loop.step()`` into (wal_start, server_time_ms,
-    line) rows until ``limit`` messages are buffered or a receive
-    deadline signals the stream is idle (one bounded micro-batch —
-    the admission cap applies above). ``ack`` advances the loop's
+    line) rows until ``limit`` messages are buffered or the stream is
+    idle: a keepalive shows the server has sent everything committed
+    when the fetch started, or (the liveness fallback) a receive
+    deadline passes. One bounded micro-batch — the admission cap
+    applies above. ``ack`` advances the loop's
     durable LSN and sends a Standby Status Update immediately (W1).
     Reconnects (incomplete-txn defense, error recovery) restart the
     stream from the acked LSN — at-least-once, duplicates filtered by
@@ -431,9 +433,27 @@ class LiveTransport:
     def fetch(
         self, after_lsn: int, limit: int, after_seq: int | None = None
     ) -> list[tuple[int, int, str | None, int]]:
-        """One bounded micro-batch. Three exits: ``limit`` messages
-        buffered, a receive timeout (stream idle), or the per-batch
-        wall-clock budget. A transport-level failure mid-batch
+        """One bounded micro-batch. Exits: ``limit`` messages buffered;
+        idle, when the stream has caught up; or the per-batch
+        wall-clock budget.
+
+        Idle means the server has sent everything committed when the
+        fetch started. The fetch samples the server's flushed WAL
+        position (``current_end``, IDENTIFY_SYSTEM ``xlogpos``) as its
+        ``target`` once its stream is up, and ends as soon as a
+        keepalive on that connection reports ``server_wal_end >=
+        target`` — checked before every blocking receive, so a stream
+        that is already caught up does not block. The walsender stamps
+        a keepalive with ``sentPtr``, and it writes a transaction's
+        changes while decoding its commit record, so by TCP order every
+        change committed before ``target`` arrives ahead of that
+        keepalive: the rule can cut a batch early, never skip data. A
+        receive timeout still counts as idle, as the liveness fallback
+        for a server that sends no such keepalive (or a failed sample).
+        Either idle exit flags truncation instead while a pgoutput v2
+        streamed transaction is open (``mid_stream``).
+
+        A transport-level failure mid-batch
         (socket death, corrupt frame, TLS teardown) RECONNECTS and
         CONTINUES the same batch from the emitted high-water mark —
         the reference reconnects on ANY receive error
@@ -476,6 +496,7 @@ class LiveTransport:
         # the admission filter — see docstring)
         hwm, hwm_k = after_lsn, (after_seq - 1) if after_seq else -1
         truncated = False
+        target: int | None = None
         deadline = _time.monotonic() + self.fetch_budget_s
         while len(out) < limit and _time.monotonic() < deadline:
             try:
@@ -488,44 +509,59 @@ class LiveTransport:
                     truncated = True
                     break
                 raise
+            if target is None:
+                try:
+                    target = self.current_end()
+                except (WireError, ServerError, OSError):
+                    pass  # no caught-up exit; the receive timeout still ends it
             # snapshot, not the raw counter: the loop's stats
             # accumulate over the CONNECTION's lifetime, so "a timeout
             # happened before this batch" must not end it
             timeouts_at_start = self._loop.stats.get("receive_timeouts", 0)
             budget_spent = False
             while len(out) < limit:
-                try:
-                    msgs = self._loop.step()
-                except (WireError, ServerError, OSError):
-                    self.stats["transport_errors"] += 1
-                    self._disconnect()
-                    break  # outer loop reconnects and continues the batch
-                for m in msgs:
-                    if m.synthetic:
-                        # error-recovery COMMIT: clamp to the batch
-                        # high-water position; does not advance the
-                        # equal-LSN run (it is not a WAL frame)
-                        hwm = max(hwm, m.wal_start)
-                        out.append((hwm, m.server_time_ms, m.line, hwm_k))
-                        continue
-                    if m.wal_start == self._run_lsn:
-                        self._run_k += 1
-                    else:
-                        self._run_lsn = m.wal_start
-                        self._run_k = assembly.run_head_k(m.line)
-                    k = self._run_k
-                    if not after.consumed(m.wal_start, k):
-                        if (m.wal_start, k) > (hwm, hwm_k):
-                            hwm, hwm_k = m.wal_start, k
-                        out.append((m.wal_start, m.server_time_ms, m.line, k))
-                if self._loop.stats.get("receive_timeouts", 0) > timeouts_at_start:
+                # caught up: every change committed before ``target``
+                # arrived ahead of the keepalive that reported it
+                idle = target is not None and self._loop.server_wal_end >= target
+                if not idle:
+                    try:
+                        msgs = self._loop.step()
+                    except (WireError, ServerError, OSError):
+                        self.stats["transport_errors"] += 1
+                        self._disconnect()
+                        break  # outer loop reconnects and continues the batch
+                    for m in msgs:
+                        if m.synthetic:
+                            # error-recovery COMMIT: clamp to the batch
+                            # high-water position; does not advance the
+                            # equal-LSN run (it is not a WAL frame)
+                            hwm = max(hwm, m.wal_start)
+                            out.append((hwm, m.server_time_ms, m.line, hwm_k))
+                            continue
+                        if m.wal_start == self._run_lsn:
+                            self._run_k += 1
+                        else:
+                            self._run_lsn = m.wal_start
+                            self._run_k = assembly.run_head_k(m.line)
+                        k = self._run_k
+                        if not after.consumed(m.wal_start, k):
+                            if (m.wal_start, k) > (hwm, hwm_k):
+                                hwm, hwm_k = m.wal_start, k
+                            out.append((m.wal_start, m.server_time_ms, m.line, k))
+                    # liveness fallback: a server that sends no caught-up
+                    # keepalive still ends the batch on a receive timeout
+                    idle = (
+                        self._loop.stats.get("receive_timeouts", 0)
+                        > timeouts_at_start
+                    )
+                if idle:
                     if getattr(self._loop.conn, "mid_stream", False):
-                        # the pgoutput adapter's deadline fired while a
-                        # v2 streamed transaction is still buffering —
-                        # the stream is BUSY, not idle: an under-cap
-                        # batch here proves nothing about the backlog,
-                        # so it must flag truncation like every other
-                        # non-idle exit (code-review r10-late #4)
+                        # a v2 streamed transaction is still open on the
+                        # pgoutput adapter — the stream is BUSY, not
+                        # idle: an under-cap batch here proves nothing
+                        # about the backlog, so it must flag truncation
+                        # like every other non-idle exit (code-review
+                        # r10-late #4)
                         truncated = budget_spent = True
                         break
                     # stream idle — micro-batch done (drain here too:
@@ -595,6 +631,9 @@ class LiveTransport:
         return out
 
     def current_end(self) -> int:
+        """The server's flushed WAL position (IDENTIFY_SYSTEM
+        ``xlogpos``) over a short-lived probe connection; ``fetch``
+        samples it as its caught-up target."""
         from .pgwire import probe_xlogpos
 
         if self._connected():

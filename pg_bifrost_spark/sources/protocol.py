@@ -9,7 +9,9 @@ Responsibilities (reference parity, file:line cited per method):
 
   * keepalive handling — reply-requested heartbeats are answered with a
     standby status update; >5 requests arriving with <100 ms total
-    spacing mean the server wants us gone (client.go:426-468);
+    spacing mean the server wants us gone (client.go:426-468); every
+    keepalive's ``server_wal_end`` is kept as a running max, the
+    transport's proof that the stream has caught up;
   * duplicate-transaction accounting — COMMIT WalStart must advance;
     a non-advancing COMMIT is a server re-send and is counted, never
     re-emitted upstream wrongly (client.go:484-496);
@@ -106,6 +108,10 @@ class ReplicationClientLoop:
 
     acked_lsn: int = 0
     highest_wal_start: int = 0
+    # highest keepalive ``server_wal_end`` on this connection: the
+    # walsender's sentPtr, so every change committed before it has
+    # already arrived (TCP order)
+    server_wal_end: int = 0
     saw_commit: bool = False
     first_iteration: bool = True
     xid: str | None = None
@@ -130,7 +136,8 @@ class ReplicationClientLoop:
     def handle_keepalive(self, msg: Keepalive) -> None:
         """client.go:426-468: answer only reply-requested heartbeats;
         rapid requests (>5 with <100 ms cumulative spacing) mean
-        shutdown."""
+        shutdown. Every keepalive raises ``server_wal_end``."""
+        self.server_wal_end = max(self.server_wal_end, msg.server_wal_end)
         if not msg.reply_requested:
             return
         self.send_progress()
@@ -276,9 +283,10 @@ class PgOutputConnAdapter:
     def mid_stream(self) -> bool:
         """True while a v2 streamed transaction is open (segment active
         or lines buffered awaiting Stream Commit). The transport uses
-        this to tell 'stream idle' apart from 'deadline expired while
-        buffering a streamed transaction' — the latter must flag
-        truncation, not end a drain (code-review r10-late #4)."""
+        this to tell 'stream idle' apart from 'caught up, or deadline
+        expired, while a streamed transaction is still open' — the
+        latter must flag truncation, not end a drain (code-review
+        r10-late #4)."""
         d = self.decoder
         return d._stream_xid is not None or bool(d._stream_buf)
 

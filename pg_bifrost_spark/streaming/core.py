@@ -134,10 +134,13 @@ def drain_cdc_query(
             "not imply an empty backlog — drive it with start_cdc_query "
             "and an explicit stop condition instead."
         )
-    # a run that comes in UNDER the admission cap has by definition
-    # consumed everything the source could fetch at that moment — the
-    # empty confirm round would only re-pay query startup (~4 s
-    # measured); data appearing later is the next drain's business
+    # a run that comes in UNDER the admission cap, untruncated, ended
+    # its fetch idle: on the live path that is the server confirming
+    # the stream caught up as of the fetch's start (a keepalive at
+    # the sampled xlogpos), or its receive-timeout fallback; on
+    # replay, the corpus end. The empty confirm round would only
+    # re-pay query startup (~4 s measured); data committed later is
+    # the next drain's business
     cap = source.admission_cap(source_options or {})
     rounds = 0
     for _ in range(max_rounds):

@@ -228,7 +228,7 @@ def test_cli_live_dsn_end_to_end(spark, tmp_path):
             ("xlog", 9064, "COMMIT 802"),
         ],
     ]
-    srv = FakeWalsender(frames_per_conn=scripts)
+    srv = FakeWalsender(frames_per_conn=scripts, concurrent=True)
     try:
         dsn = f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}"
         out_dir = str(tmp_path / "out")
@@ -302,7 +302,7 @@ def test_cli_live_two_phase_negotiation_and_delivery(spark, tmp_path):
         ("xlog_raw", 112, encode_prepare(900, "cli-gid")),
         ("xlog_raw", 150, encode_commit_prepared(900, "cli-gid")),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         dsn = f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}"
         out_dir = str(tmp_path / "out")

@@ -482,7 +482,7 @@ def test_basic_golden_passes_verify_via_live_wire_transport(spark, tmp_path):
                 if ln.strip():
                     m = json.loads(ln)
                     frames.append(("xlog", m["wal_start"], m["line"]))
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         out_dir, ck_dir = str(tmp_path / "out"), str(tmp_path / "ck")
 
@@ -537,7 +537,7 @@ def test_basic_golden_passes_verify_via_pgoutput_wire_transport(spark, tmp_path)
                     if "error" not in m:
                         lines.append((m["wal_start"], m["line"]))
     frames = [("xlog_raw", lsn, fr) for lsn, fr in frames_with_lsns(lines)]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         out_dir, ck_dir = str(tmp_path / "out"), str(tmp_path / "ck")
 

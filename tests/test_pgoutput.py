@@ -326,7 +326,7 @@ def test_live_transport_pgoutput_end_to_end():
         ("xlog_raw", 116, encode_update(1, ["1", "beta", Ellipsis], old=["1", "alpha", None])),
         ("xlog_raw", 124, encode_commit()),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -602,7 +602,7 @@ def test_live_transport_pgoutput_v2_streamed_end_to_end():
         ("xlog_raw", 140, encode_stream_stop()),
         ("xlog_raw", 148, encode_stream_commit(91)),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -622,6 +622,50 @@ def test_live_transport_pgoutput_v2_streamed_end_to_end():
         cmd = srv.start_commands[0]
         assert '"proto_version" \'2\'' in cmd and '"streaming" \'on\'' in cmd
         t.close()
+    finally:
+        srv.close()
+
+
+def test_caught_up_keepalive_mid_stream_flags_truncation_not_idle():
+    """A walsender can report it has caught up while a v2 streamed
+    transaction is still open: its changes are buffered, its commit not
+    yet decoded. That fetch is busy, not idle, so it flags truncation
+    (without waiting out the receive timeout); the next fetch, sampled
+    after the commit, delivers the transaction."""
+    from pg_bifrost_spark.sources.pgcdc import LiveTransport
+    from pg_bifrost_spark.sources.pgwire import int_to_lsn, lsn_to_int
+    from tests.test_pgwire import DB, USER, XLOGPOS, FakeWalsender
+
+    caught_up = lsn_to_int(XLOGPOS)
+    frames = [
+        ("xlog_raw", caught_up - 64, encode_relation(1, "public", "t", REL)),
+        ("xlog_raw", caught_up - 64, encode_stream_start(93)),
+        ("xlog_raw", caught_up - 56, encode_streamed(encode_insert(1, ["1", "a", None]), 93)),
+        ("xlog_raw", caught_up - 48, encode_stream_stop()),
+        ("keepalive", caught_up, False),
+        ("xlog_raw", caught_up + 8, encode_stream_commit(93)),
+        ("keepalive", caught_up + 16, False),
+    ]
+    srv = FakeWalsender(frames=frames, concurrent=True)
+    try:
+        t = LiveTransport(
+            f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
+            "s_mid",
+            plugin="pgoutput",
+            pgoutput_proto_version=2,
+            receive_timeout_s=5,
+            max_connect_attempts=1,
+        )
+        assert t.fetch(0, 10) == []
+        assert t._loop.conn.mid_stream
+        assert t.truncations == 1
+        srv.xlogpos = int_to_lsn(caught_up + 16)  # the commit is flushed
+        rows = t.fetch(0, 10)
+        assert [r[2].split(" ")[0] for r in rows] == ["BEGIN", "table", "COMMIT"]
+        assert t.truncations == 1
+        assert t._loop.stats["receive_timeouts"] == 0
+        t.close()
+        assert srv.failures == [], srv.failures
     finally:
         srv.close()
 
@@ -767,7 +811,7 @@ def test_live_transport_two_phase_end_to_end():
         ("xlog_raw", 112, encode_prepare(560, "wire-gid")),
         ("xlog_raw", 150, encode_commit_prepared(560, "wire-gid")),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -811,7 +855,7 @@ def test_live_transport_v2_interleaved_streams_commit_independently():
         ("xlog_raw", 140, encode_stream_commit(20)),
         ("xlog_raw", 160, encode_stream_commit(10)),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -861,7 +905,7 @@ def test_live_transport_pgoutput_origin_filtering_on_wire_path():
         ("xlog_raw", 136, encode_stream_stop()),
         ("xlog_raw", 140, encode_stream_commit(7)),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -1142,7 +1186,7 @@ def test_live_transport_drains_messages_per_batch():
         ("xlog_raw", 108, encode_insert(1, ["1", "alpha", None])),
         ("xlog_raw", 124, encode_commit()),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",
@@ -1259,7 +1303,7 @@ def test_two_phase_negotiation_on_the_wire():
         ("xlog_raw", 112, encode_prepare(42, "neg")),
         ("xlog_raw", 130, encode_commit_prepared(42, "neg")),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         t = LiveTransport(
             f"postgresql://{USER}@127.0.0.1:{srv.port}/{DB}",

@@ -20,6 +20,7 @@ import os
 import socket
 import struct
 import threading
+import time
 
 import pytest
 
@@ -56,16 +57,23 @@ def _cstr(b: bytes) -> list[bytes]:
 class FakeWalsender:
     """One-connection-at-a-time scripted server. ``auth`` picks the
     exchange; ``frames`` is the CopyBoth script (each item either
-    ("xlog", lsn, line), ("keepalive", lsn, reply), ("error", msg), or
-    ("expect_status", lsn) — the server BLOCKS reading a standby
-    status update and asserts its three LSN fields). A
-    ``frames_per_conn`` item may be a callable of the requested start
-    LSN that returns the script.
+    ("xlog", lsn, line), ("keepalive", lsn, reply), ("error", msg),
+    ("sleep", seconds), or ("expect_status", lsn) — the server BLOCKS
+    reading a standby status update and asserts its three LSN
+    fields). A ``frames_per_conn`` item may be a callable of the
+    requested start LSN that returns the script.
 
     ``concurrent=True`` serves each connection on its own thread, and,
     as Postgres does, rejects a START_REPLICATION on a slot another
     open connection is streaming with SQLSTATE 55006 (recorded in
-    ``rejected_starts``)."""
+    ``rejected_starts``). A ``LiveTransport.fetch`` needs it: each
+    fetch samples IDENTIFY_SYSTEM ``xlogpos`` on a second connection
+    while its stream is open.
+
+    PG 15 ends a caught-up backlog with a keepalive at ``xlogpos``
+    (the walsender's sentPtr once it has sent everything flushed); a
+    script models that by ending with ``("keepalive", <xlogpos>,
+    False)``. Without it a fetch ends only on its receive timeout."""
 
     def __init__(
         self,
@@ -392,8 +400,9 @@ class FakeWalsender:
             kind = item[0]
             if kind == "abort":
                 # abrupt transport death (no CopyDone, no ErrorResponse)
-                # — the network-blip case the client must survive
-                conn.sock.close()
+                # — the network-blip case the client must survive.
+                # ``_serve_conn`` closes the socket AFTER the slot is
+                # released, so a concurrent reconnect never sees 55006
                 return
             if kind == "copydone":
                 # end-of-stream handoff: CopyDone, then the post-copy
@@ -403,6 +412,10 @@ class FakeWalsender:
                 conn.sendall(_msg(b"C", b"COPY 0\x00"))
                 self._rfq(conn)
                 return
+            if kind == "sleep":
+                # a pause between frames, e.g. WAL not yet decoded
+                time.sleep(item[1])
+                continue
             if kind == "xlog":
                 _, lsn, line = item
                 body = b"w" + struct.pack(
@@ -642,7 +655,7 @@ def test_live_transport_fetch_and_ack():
         ("xlog", 3008, "table public.t: INSERT: id[integer]:7"),
         ("xlog", 3016, "COMMIT 900"),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -685,9 +698,113 @@ def test_live_transport_current_end_probe():
 
 
 # ---------------------------------------------------------------------------
+# the caught-up exit: a keepalive at the fetch's sampled xlogpos ends it
+# ---------------------------------------------------------------------------
+CAUGHT_UP = lsn_to_int(XLOGPOS)
+PRE_BACKLOG = CAUGHT_UP - 4096  # the slot's start: below every frame
+
+
+def _backlog(first: int, n_txns: int) -> list:
+    frames = []
+    for i in range(n_txns):
+        lsn = first + 24 * i
+        frames += [
+            ("xlog", lsn, f"BEGIN {700 + i}"),
+            ("xlog", lsn + 8, f"table public.t: INSERT: id[integer]:{i}"),
+            ("xlog", lsn + 16, f"COMMIT {700 + i}"),
+        ]
+    return frames
+
+
+def _live(srv, slot):
+    from pg_bifrost_spark.sources.pgcdc import LiveTransport
+
+    return LiveTransport(
+        f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}",
+        slot=slot,
+        receive_timeout_s=5,
+    )
+
+
+def test_caught_up_keepalive_ends_fetch_without_receive_timeout():
+    """Scripted like a PG 15 walsender draining a backlog: a keepalive
+    at the pre-backlog position right after START_REPLICATION, the
+    XLogData frames, then a keepalive at ``xlogpos`` once it has sent
+    everything flushed, and the connection held open. The fetch must
+    end on that keepalive with every frame, not sit out the receive
+    timeout."""
+    frames = _backlog(CAUGHT_UP - 2048, 3)
+    script = [("keepalive", PRE_BACKLOG, False), *frames, ("keepalive", CAUGHT_UP, False)]
+    srv = FakeWalsender(frames=script, concurrent=True)
+    try:
+        t = _live(srv, "s_caught_up")
+        rows = t.fetch(after_lsn=0, limit=100)
+        assert [(r[0], r[2]) for r in rows] == [(f[1], f[2]) for f in frames]
+        assert t._loop.stats["receive_timeouts"] == 0
+        assert t._loop.server_wal_end == CAUGHT_UP
+        assert t.truncations == 0
+        t.close()
+        assert srv.failures == [], srv.failures
+    finally:
+        srv.close()
+
+
+def test_pre_backlog_keepalive_never_ends_a_fetch():
+    """The keepalive PG 15 sends right after START_REPLICATION carries
+    the start position, before any data. Read as "at or below the
+    received position" it would end the fetch empty; against the
+    fetch's ``xlogpos`` target it never does, so data that follows a
+    pause shorter than the receive timeout is all delivered."""
+    frames = _backlog(CAUGHT_UP - 2048, 2)
+    script = [
+        ("keepalive", PRE_BACKLOG, False),
+        ("sleep", 0.5),
+        *frames,
+        ("keepalive", CAUGHT_UP, False),
+    ]
+    srv = FakeWalsender(frames=script, concurrent=True)
+    try:
+        t = _live(srv, "s_pre_backlog")
+        rows = t.fetch(after_lsn=PRE_BACKLOG, limit=100)
+        assert srv.start_lsns == [PRE_BACKLOG]
+        assert [r[0] for r in rows] == [f[1] for f in frames]
+        assert t._loop.stats["receive_timeouts"] == 0
+        assert t.truncations == 0
+        t.close()
+    finally:
+        srv.close()
+
+
+def test_cap_exit_then_next_fetch_exits_idle_on_unread_keepalive():
+    """A cap exit leaves the caught-up keepalive unread on the socket.
+    The next fetch reads it and exits idle, and a fetch on the
+    caught-up stream after that returns at once, without a receive."""
+    frames = _backlog(CAUGHT_UP - 2048, 2)
+    script = [("keepalive", PRE_BACKLOG, False), *frames, ("keepalive", CAUGHT_UP, False)]
+    srv = FakeWalsender(frames=script, concurrent=True)
+    try:
+        t = _live(srv, "s_cap_then_idle")
+        first = t.fetch(after_lsn=0, limit=len(frames))
+        assert [r[0] for r in first] == [f[1] for f in frames]
+        assert t._loop.server_wal_end == PRE_BACKLOG  # keepalive still unread
+        last, k = first[-1][0], first[-1][3]
+        assert t.fetch(after_lsn=last, limit=100, after_seq=k + 1) == []
+        assert t._loop.server_wal_end == CAUGHT_UP
+        received = t._loop.stats["received"]
+        assert t.fetch(after_lsn=last, limit=100, after_seq=k + 1) == []
+        assert t._loop.stats["received"] == received
+        assert t._loop.stats["receive_timeouts"] == 0
+        assert t.truncations == 0
+        t.close()
+    finally:
+        srv.close()
+
+
+# ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
 def test_lsn_and_dsn_helpers():
+
     assert int_to_lsn(lsn_to_int("A1/22334455")) == "A1/22334455"
     assert lsn_to_int("0/0") == 0
     d = parse_dsn("postgres://alice:pw@db.internal.example:6432/warehouse")
@@ -828,7 +945,7 @@ def test_live_transport_error_recovery_mid_txn():
         ("xlog", 5008, "table public.t: INSERT: id[integer]:1"),
         ("error", "WAL corrupt"),
     ]
-    srv = FakeWalsender(frames=frames, xlogpos="0/2000")
+    srv = FakeWalsender(frames=frames, xlogpos="0/2000", concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -976,7 +1093,7 @@ def test_live_transport_reconnects_after_transport_blip():
             ("xlog", 3032, "COMMIT 901"),
         ],
     ]
-    srv = FakeWalsender(frames_per_conn=scripts)
+    srv = FakeWalsender(frames_per_conn=scripts, concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -1050,6 +1167,7 @@ def test_fetch_budget_bounds_replay_latency():
 
     class _Loop:
         stats: dict = {}
+        server_wal_end = 0  # no keepalive: the stream never catches up
 
         def step(self):
             # an endless stream of already-seen WAL, below after_lsn
@@ -1059,6 +1177,9 @@ def test_fetch_budget_bounds_replay_latency():
 
     class _Conn:
         _sock = object()
+
+        def current_server_lsn(self):
+            return 200
 
     t._conn, t._loop = _Conn(), _Loop()
     t0 = _time.monotonic()
@@ -1112,7 +1233,7 @@ def test_copydone_midstream_recovers_and_reconnects():
             ("xlog", 23803738, "COMMIT 971"),
         ],
     ]
-    srv = FakeWalsender(frames_per_conn=scripts)
+    srv = FakeWalsender(frames_per_conn=scripts, concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -1213,7 +1334,7 @@ def test_equal_lsn_begin_and_first_change_both_admitted():
         ("xlog", 5000, "table public.t: INSERT: id[integer]:1"),
         ("xlog", 5008, "COMMIT 42"),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -1243,7 +1364,7 @@ def test_equal_lsn_batch_boundary_resumes_mid_run():
         ("xlog", 5000, "table public.t: INSERT: id[integer]:1"),
         ("xlog", 5008, "COMMIT 42"),
     ]
-    srv = FakeWalsender(frames=frames)
+    srv = FakeWalsender(frames=frames, concurrent=True)
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport
 
@@ -1295,7 +1416,7 @@ def test_resume_at_commit_admits_next_txn_begin():
             ("xlog", 5008, "COMMIT 42"),
         ],
     ]
-    srv = FakeWalsender(frames_per_conn=scripts)
+    srv = FakeWalsender(frames_per_conn=scripts, concurrent=True)
     opts = {
         "dsn": f"postgres://{USER}@127.0.0.1:{srv.port}/{DB}",
         "slot": "s_resume_commit",
@@ -1380,6 +1501,7 @@ def test_server_error_on_start_replication_is_retried():
     srv = FakeWalsender(
         frames=[("xlog", 7000, "BEGIN 1"), ("xlog", 7008, "COMMIT 1")],
         fail_start=["55006", "55006"],
+        concurrent=True,
     )
     try:
         from pg_bifrost_spark.sources.pgcdc import LiveTransport

@@ -82,6 +82,29 @@ def test_keepalive_with_reply_request_sends_acked_lsn():
     assert conn.status_updates == [1234]
 
 
+def test_server_wal_end_is_running_max_over_keepalives():
+    """Every keepalive raises ``server_wal_end`` (the transport's
+    caught-up proof), reply requested or not; it never moves back, and
+    a reply-requested one is still answered."""
+    conn = FakeConn(
+        [
+            Keepalive(server_wal_end=300, reply_requested=False),
+            Keepalive(server_wal_end=100, reply_requested=True),
+            Keepalive(server_wal_end=500, reply_requested=True),
+            Keepalive(server_wal_end=400, reply_requested=False),
+        ]
+    )
+    loop = ReplicationClientLoop(conn=conn)
+    assert loop.server_wal_end == 0  # a fresh loop has no proof yet
+    loop.ack(77)
+    seen = []
+    for _ in range(4):
+        assert loop.step() == []
+        seen.append(loop.server_wal_end)
+    assert seen == [300, 300, 500, 500]
+    assert conn.status_updates == [77, 77]
+
+
 def test_rapid_heartbeats_trigger_shutdown():
     """>5 reply-requested heartbeats with <100 ms total spacing ==
     server wants us to go away (client.go:449-462)."""
